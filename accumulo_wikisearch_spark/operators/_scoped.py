@@ -5,9 +5,9 @@ band rows, signatures, quantized views, PQ codes) that BOTH sides of the
 returned lazy plan share — without the cache the kernel pass runs once
 per plan reference (r14 plan audit). Those persists are scoped to the
 returned plan's lifetime, but ``persist()`` alone leaves the cached
-blocks registered until the JVM context cleaner collects them; on a
-long-lived serving session that is executor storage churn (guide §5,
-r14 verdict #4 / ADVICE).
+blocks registered in Spark's CacheManager until something unpersists
+them; on a long-lived serving session that is executor storage churn
+(guide §5, r14 verdict #4 / ADVICE).
 
 This module gives every such persist an explicit handle:
 
@@ -16,10 +16,10 @@ This module gives every such persist an explicit handle:
 - callers that consume the result and want the blocks gone NOW call
   :func:`release(result)`; a facade/session teardown calls
   :func:`release_all()`;
-- nothing changes for callers that ignore the registry: entries hold
-  only weak references to results, so dropped results age out of the
-  registry and the context cleaner reclaims their blocks exactly as
-  before (bench lanes and oracle entries are unaffected).
+- entries hold only weak references to results, so a dropped result's
+  ENTRY ages out of the registry — but its blocks do NOT: garbage
+  collection never unpersists a cached Dataset, so a scoped cache that
+  was not released stays cached until ``spark.catalog.clearCache()``.
 
 ``release`` is deliberately NOT automatic at operator entry: benchmark
 reps and repeated serving calls build plan-identical intermediates that
@@ -75,17 +75,20 @@ class Scope:
 def release(result: DataFrame) -> int:
     """Unpersist the scoped caches registered for ``result`` (a DataFrame
     previously returned by a scope-attached operator). Returns the number
-    of cache entries released; 0 for unregistered results."""
+    of cache entries released; 0 for unregistered results.
+
+    CacheManager shares one cache among plan-identical persists, so this
+    can also evict the cache of a plan-identical SIBLING result (which
+    then recomputes on its next use)."""
     with _LOCK:
-        entry = _REGISTRY.pop(id(result), None)
-    if entry is None:
-        return 0
-    ref, cached = entry
-    # guard against id() reuse after the original result was collected
-    if ref() is not result:
-        return 0
+        entry = _REGISTRY.get(id(result))
+        # an entry under a reused id() belongs to another (live) result:
+        # leave it registered
+        if entry is None or entry[0]() is not result:
+            return 0
+        del _REGISTRY[id(result)]
     n = 0
-    for df in cached:
+    for df in entry[1]:
         try:
             df.unpersist()
             n += 1

@@ -43,6 +43,7 @@ from pyspark.sql import functions as F
 from accumulo_wikisearch_spark.config import EngineConfig
 from accumulo_wikisearch_spark.operators.ingest import (
     WikisearchIndex,
+    _write_tables,
     load_index,
     write_index,
 )
@@ -196,9 +197,9 @@ def write_delta(
     is an at-least-once replay no-op returning False, while the default
     ``"raise"`` makes any duplicate id loud.
 
-    The minor-compaction flush: small files, no repartition (the batch is
-    micro-batch-sized), no rewrite of the base. ``build_index`` on the new
-    articles produces the delta catalog.
+    The minor-compaction flush: small files, no repartition (micro-batch
+    sized), no base rewrite; the tables of the ``build_index`` delta go
+    through the concurrent, tokenize-once fan-out ``write_index`` uses.
 
     Batch ids must be fresh ACROSS COMPACTIONS: a compaction records the
     ids it folded in the catalog manifest (their dirs linger only as
@@ -277,8 +278,13 @@ def write_delta(
             f" NEW content needs a NEW id."
         )
     staged = f"{path}/deltas/{_STAGED_DATA}{batch_id}"
-    for name in _ALL_TABLES:
-        getattr(delta, name).write.mode("overwrite").parquet(f"{staged}/{name}")
+    _write_tables(
+        delta,
+        [
+            lambda n=n: getattr(delta, n).write.parquet(f"{staged}/{n}", "overwrite")
+            for n in _ALL_TABLES
+        ],
+    )
     _publish_delta(spark, staged, base, expect=_ALL_TABLES)
     if _folded():
         raise RuntimeError(

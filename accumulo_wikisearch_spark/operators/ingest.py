@@ -654,6 +654,30 @@ def _docs_wide_writer(index: "WikisearchIndex", path: str, zorder, small: bool):
     )
 
 
+def _write_tables(index: WikisearchIndex, writes: list) -> None:
+    """Run ``writes`` (zero-argument table writes over ``index``) as
+    overlapping jobs over the tokenized base, persisted ONCE for all of
+    them (released afterwards unless the caller had cached it)."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    tok = index._tokenized
+    own = tok is not None and not tok.storageLevel.useMemory
+    try:
+        if own:
+            # materialize BEFORE the parallel writes: concurrent first-touch
+            # of a lazy cache makes each thread compute its own partitions
+            tok.persist().count()
+        # one thread per table: a small write's serial cost is its DRIVER-
+        # side planning/commit (4 workers paid two planning waves, ~0.4 s
+        # of the sf0.1 compaction lane); on a cluster FIFO scheduling
+        # backfills idle executors. Leaving the pool waits for every write.
+        with ThreadPoolExecutor(max_workers=len(writes)) as ex:
+            list(ex.map(lambda w: w(), writes))
+    finally:
+        if own:
+            tok.unpersist()
+
+
 def write_index(
     index: WikisearchIndex, path: str, zorder=None, catalog_bytes: int | None = None
 ) -> None:
@@ -683,21 +707,8 @@ def write_index(
     degrades to row-group stats there; choose per catalog by its dominant
     query shape.
 
-    The eight table writes are INDEPENDENT jobs submitted from worker
-    threads, so the scheduler overlaps them; on a cluster this is the
-    difference between 8 sequential write barriers and one.  The shared
-    tokenized base is persisted for the duration of the writes (and
-    released afterwards if it wasn't cached before) — without this every
-    table write re-runs the tokenize pass."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    tok = index._tokenized
-    tok_was_cached = tok is not None and tok.storageLevel.useMemory
-    if tok is not None and not tok_was_cached:
-        # materialize BEFORE the parallel writes: concurrent first-touch
-        # of a lazy cache makes each thread compute its own partitions
-        tok.persist().count()
-
+    The eight table writes go through :func:`_write_tables`, the
+    concurrent, tokenize-once fan-out ``write_delta`` shares."""
     small = catalog_bytes is not None and catalog_bytes < SMALL_CATALOG_BYTES
 
     def shard(df: DataFrame) -> DataFrame:
@@ -759,17 +770,7 @@ def write_index(
             .parquet(f"{path}/documents")
         ),
     ]
-    try:
-        # one thread per table: the serial cost of a small write is its
-        # DRIVER-side planning/commit, and 4 workers left the 8 writes
-        # paying two planning waves (measured ~0.4 s of the compaction
-        # lane at sf0.1); on a cluster FIFO scheduling backfills the
-        # extra in-flight jobs into idle executors (guide §2.6)
-        with ThreadPoolExecutor(max_workers=len(writes)) as ex:
-            list(ex.map(lambda w: w(), writes))
-    finally:
-        if tok is not None and not tok_was_cached:
-            tok.unpersist()
+    _write_tables(index, writes)
     # an EMPTY catalog (e.g. compaction after full tombstoning) leaves the
     # partitionBy table dirs with no data files — unreadable on load (no
     # schema). Rewrite any such dir as one schema-only file (partition

@@ -568,7 +568,7 @@ def write_ivf_index(
     (
         ivf_assign(emb, cents)
         .repartition("cell")
-        .sortWithinPartitions("vec_id")
+        .sortWithinPartitions("cell", "vec_id")
         .write.mode("overwrite")
         .partitionBy("cell")
         .parquet(path)
@@ -592,7 +592,7 @@ def append_ivf_index(
     (
         ivf_assign(emb_delta, cents)
         .repartition("cell")
-        .sortWithinPartitions("vec_id")
+        .sortWithinPartitions("cell", "vec_id")
         .write.mode("append")
         .partitionBy("cell")
         .parquet(path)
@@ -1615,7 +1615,7 @@ def write_ivf_pq_index(
     (
         coded.where(F.col("cell") >= 0)  # drop NULL/ragged vectors, not the job
         .repartition("cell")
-        .sortWithinPartitions("vec_id")
+        .sortWithinPartitions("cell", "vec_id")
         .write.mode("overwrite")
         .partitionBy("cell")
         .parquet(path)

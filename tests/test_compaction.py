@@ -805,6 +805,57 @@ def test_one_batch_id_one_flush_kind(spark, tmp_path):
     assert got == [1, 3]  # doc 2 shadowed, no manual reload
 
 
+def _comparable(df):
+    """``df`` with map columns as sorted entry arrays (set operations
+    reject map types)."""
+    return df.select(
+        *(
+            F.array_sort(F.map_entries(f.name)).alias(f.name)
+            if f.dataType.typeName() == "map"
+            else F.col(f.name)
+            for f in df.schema.fields
+        )
+    )
+
+
+def test_write_delta_flushes_every_table_concurrently(spark, tmp_path, monkeypatch):
+    """write_delta writes its tables through write_index's concurrent,
+    tokenize-once fan-out: every staged table holds exactly the delta's
+    rows, the tokenized cache is released, and one failing table write
+    publishes nothing (the batch stays hidden, the cache still released)."""
+    import os
+
+    from accumulo_wikisearch_spark.operators.compaction import (
+        _ALL_TABLES,
+        raw_delta_names,
+    )
+
+    path = str(tmp_path / "flush")
+    write_index(build_index(_arts(spark, [(1, "enwiki", "tok", "t1")]), CFG, SF), path)
+    rows = [(i, "enwiki", f"tok w{i % 3} common", f"t{i}") for i in range(2, 40)]
+    d = build_index(_arts(spark, rows), CFG, SF)
+    assert write_delta(d, path, 0) is True
+    assert not d._tokenized.storageLevel.useMemory
+    for name in _ALL_TABLES:
+        want = _comparable(getattr(d, name))
+        got = _comparable(spark.read.parquet(f"{path}/deltas/0/{name}"))
+        assert got.exceptAll(want).count() == 0, name
+        assert want.exceptAll(got).count() == 0, name
+
+    class _FailingWrite:
+        @property
+        def write(self):
+            raise RuntimeError("table write failed")
+
+    bad = build_index(_arts(spark, rows[:5]), CFG, SF)
+    monkeypatch.setattr(bad, "reverse_index", _FailingWrite())
+    with pytest.raises(RuntimeError, match="table write failed"):
+        write_delta(bad, path, 1)
+    assert not bad._tokenized.storageLevel.useMemory
+    assert not os.path.exists(f"{path}/deltas/1")
+    assert raw_delta_names(spark, path) == {"0"}
+
+
 def test_compaction_sweeps_crashed_staging_leftovers(spark, tmp_path):
     """r11 review: a flush that crashed between staging and publish
     leaves a hidden ._staged_* dir no listing can see — compaction (the

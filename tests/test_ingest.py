@@ -155,7 +155,7 @@ def test_scan_splits_matches_spark(spark):
     None off the local filesystem."""
     from accumulo_wikisearch_spark.sources.corpus import _scan_splits
 
-    for sf in ("sf0.001", "sf0.01"):
+    for sf in ("sf0.001", "sf0.01", "sf0.1"):
         for table in ("documents", "events"):
             p = f"/root/testdata/{sf}/{table}.parquet"
             est = _scan_splits(p, spark)

@@ -701,9 +701,11 @@ def test_written_files_keep_declared_sort_order(spark, tmp_path):
     """Spark's file writer silently re-sorts by the partition columns
     when the data is not already ordered by them (and FoldablePropagation
     can strip literal sort keys first) — which destroyed the within-file
-    sort both layouts promise (r15). Pin: z-store files are z-sorted and
-    flat field_index files are (field, norm_value)-sorted on disk."""
+    sort every partitioned layout promises (r15). Pin: z-store files are
+    z-sorted, flat field_index files are (field, norm_value)-sorted, and
+    IVF / IVF-PQ cell files are vec_id-sorted on disk."""
     import glob
+    import random
 
     import pyarrow.parquet as pq
     from pyspark.sql import functions as F
@@ -735,3 +737,25 @@ def test_written_files_keep_declared_sort_order(spark, tmp_path):
         t = pq.read_table(f, columns=["field", "norm_value"])
         pairs = list(zip(t["field"].to_pylist(), t["norm_value"].to_pylist()))
         assert pairs == sorted(pairs), f"unsorted field_index file {f}"
+
+    from accumulo_wikisearch_spark.operators.similarity import (
+        write_ivf_index,
+        write_ivf_pq_index,
+    )
+
+    rng = random.Random(7)
+    ids = list(range(3000))
+    rng.shuffle(ids)  # arrival order is NOT vec_id order
+    emb = spark.createDataFrame(
+        [(i, [rng.uniform(-1, 1) for _ in range(64)]) for i in ids],
+        "vec_id long, embedding array<float>",
+    )
+    ivf, ivfpq = str(tmp_path / "ivf"), str(tmp_path / "ivfpq")
+    write_ivf_index(emb, ivf, n_cells=8, lloyd_iters=1)
+    write_ivf_pq_index(emb, ivfpq, n_cells=8, quantizers="seed")
+    for store in (ivf, ivfpq):
+        files = glob.glob(f"{store}/cell=*/part-*.parquet")
+        assert files
+        for f in files:
+            vids = pq.read_table(f, columns=["vec_id"])["vec_id"].to_pylist()
+            assert vids == sorted(vids), f"unsorted IVF cell file {f}"

@@ -80,3 +80,20 @@ def test_release_all_sweeps_everything(spark, docs):
 
 def test_release_unknown_result_is_noop(spark, docs):
     assert _scoped.release(docs) == 0
+
+
+def test_release_leaves_an_entry_filed_under_a_reused_id(spark, docs):
+    """release() checks the registered referent BEFORE removing the entry:
+    an entry under a reused id() belongs to another, live result, and
+    dropping it would leak that result's caches for good."""
+    live = dedup.minhash_lsh_pairs(docs)
+    other = docs.select("*")  # never registered
+    entry = _scoped._REGISTRY.pop(id(live))
+    _scoped._REGISTRY[id(other)] = entry  # forge the id collision
+    try:
+        assert _scoped.release(other) == 0
+        assert _scoped._REGISTRY.get(id(other)) is entry
+    finally:
+        _scoped._REGISTRY.pop(id(other), None)
+        _scoped._REGISTRY[id(live)] = entry
+    assert _scoped.release(live) > 0

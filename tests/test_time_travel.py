@@ -197,7 +197,6 @@ def test_changes_feed_refuses_full_rewrite_versions(spark, versioned_catalog, tm
 
 
 @pytest.mark.slow
-@pytest.mark.slow
 def test_changes_feed_plan_is_flat_at_many_batches(spark, tmp_path):
     """r12 (verdict #5): the feed builds ONE multi-path parquet read per
     change kind with a broadcast batch→version map — plan construction
