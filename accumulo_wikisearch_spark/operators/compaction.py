@@ -47,6 +47,7 @@ from accumulo_wikisearch_spark.operators.ingest import (
     load_index,
     write_index,
 )
+from accumulo_wikisearch_spark.operators.manifest import _fs
 from accumulo_wikisearch_spark.streaming.incremental import merge_global_index
 
 TI_KEYS = ["partition_id", "language", "doc_id", "norm_value"]
@@ -89,13 +90,6 @@ def merge_metadata(old: DataFrame, delta: DataFrame) -> DataFrame:
             F.sum("freq").alias("freq"),
         )
     )
-
-
-def _fs(spark: SparkSession, path: str):
-    jvm = spark.sparkContext._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    return fs, hpath, jvm
 
 
 def _list_delta_dirs(

@@ -37,6 +37,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from accumulo_wikisearch_spark.functions.normalize import HASH60_DUCKDB, hash60_col
+from accumulo_wikisearch_spark.operators.layout import write_layout
 from accumulo_wikisearch_spark.session import tune_runtime
 
 TOK = "string_split(text,' ')"
@@ -193,15 +194,6 @@ def _shingle_hash_sets(docs: DataFrame, k: int = 3) -> DataFrame:
     return docs.where(F.size(w) >= k).select(
         "doc_id", hs.alias("hs"), F.size(hs).alias("n")
     )
-
-
-def minhash_signatures(docs: DataFrame, k: int = 3, num_hashes: int = 64) -> DataFrame:
-    """(doc_id, sig ARRAY<BIGINT>) — minhash over word-k-gram sets.
-
-    Shuffle-free: one Arrow-batched numpy kernel computes all permutation
-    minima (see :func:`_sig_from_sets`)."""
-    sets = _shingle_hash_sets(docs, k)
-    return sets.select("doc_id", _sig_from_sets(num_hashes)(F.col("hs")).alias("sig"))
 
 
 def _sig_from_sets(num_hashes: int):
@@ -416,12 +408,8 @@ def write_minhash_store(
     computed exactly once per document over the corpus's lifetime."""
     sets = _minhash_sets(docs, k, num_hashes).persist()
     banded, s = _store_tables(sets, num_hashes, bands, max_bucket)
-    banded.repartition("bk").write.mode("overwrite").partitionBy("bk").parquet(
-        f"{path}/bands"
-    )
-    s.repartition("sk").write.mode("overwrite").partitionBy("sk").parquet(
-        f"{path}/sets"
-    )
+    write_layout(banded.repartition("bk"), f"{path}/bands", ("bk",))
+    write_layout(s.repartition("sk"), f"{path}/sets", ("sk",))
     sets.unpersist()
 
 
@@ -440,12 +428,8 @@ def append_minhash_store(
     re-applies it globally.)"""
     sets = _minhash_sets(new_docs, k, num_hashes).persist()
     banded, s = _store_tables(sets, num_hashes, bands, max_bucket=None)
-    banded.repartition("bk").write.mode("append").partitionBy("bk").parquet(
-        f"{path}/bands"
-    )
-    s.repartition("sk").write.mode("append").partitionBy("sk").parquet(
-        f"{path}/sets"
-    )
+    write_layout(banded.repartition("bk"), f"{path}/bands", ("bk",), mode="append")
+    write_layout(s.repartition("sk"), f"{path}/sets", ("sk",), mode="append")
     sets.unpersist()
 
 

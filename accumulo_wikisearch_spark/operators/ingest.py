@@ -32,6 +32,10 @@ from pyspark.sql import functions as F
 
 from accumulo_wikisearch_spark.config import EngineConfig
 from accumulo_wikisearch_spark.functions.normalize import normalize_col, tokenize_col
+from accumulo_wikisearch_spark.operators.layout import (
+    write_layout,
+    write_zordered_docs,
+)
 
 # Default mapping of article scalar columns → field names (the reference's
 # event fields ID/TITLE/TIMESTAMP/COMMENTS, ArticleExtractor.java:81-88).
@@ -641,14 +645,9 @@ def _docs_wide_writer(index: "WikisearchIndex", path: str, zorder, small: bool):
         d = index.docs_wide.coalesce(1) if small else index.docs_wide.repartition(
             "partition_id"
         )
-        return lambda: (
-            d.sortWithinPartitions("partition_id", "doc_id")
-            .write.mode("overwrite")
-            .partitionBy("partition_id")
-            .parquet(f"{path}/docs_wide")
+        return lambda: write_layout(
+            d, f"{path}/docs_wide", ("partition_id",), ("doc_id",)
         )
-    from accumulo_wikisearch_spark.operators.layout import write_zordered_docs
-
     return lambda: write_zordered_docs(
         index.docs_wide, f"{path}/docs_wide", zorder
     )
@@ -685,14 +684,9 @@ def write_index(
     ``partition_id``, sorted within files by (field, norm_value) so per-term
     scans hit few row groups (sorted bulk load analogue, SURVEY §4 O19).
 
-    Every partitionBy write sorts with the PARTITION COLUMN as the leading
-    key: Spark's file writer requires rows ordered by the partition columns
-    and silently inserts its own (unstable) sort when they are not — which
-    destroyed the (field, norm_value) within-file order this layout
-    promises (discovered r15: written field_index files were NOT
-    norm_value-sorted, so row-group min/max skipping was ineffective on
-    disk catalogs). Leading with partition_id satisfies the writer's
-    required ordering, so OUR sort survives into the files.
+    Every table goes through :func:`layout.write_layout`, which keeps
+    the declared within-file order on disk and leaves an empty table
+    readable.
 
     ``catalog_bytes`` (the caller's measured on-disk size, when known)
     opts tables below :data:`SMALL_CATALOG_BYTES` into one-task writes —
@@ -716,76 +710,40 @@ def write_index(
         # stage per write job); one writer task per shard otherwise
         return df.coalesce(1) if small else df.repartition("partition_id")
 
+    def by_field(df: DataFrame) -> DataFrame:
+        return df.coalesce(1) if small else df.repartition(F.col("field"))
+
+    pid = ("partition_id",)
     writes = [
-        lambda: (
-            shard(index.field_index)
-            .sortWithinPartitions("partition_id", "field", "norm_value")
-            .write.mode("overwrite")
-            .partitionBy("partition_id")
-            .parquet(f"{path}/field_index")
+        lambda: write_layout(
+            shard(index.field_index),
+            f"{path}/field_index",
+            pid,
+            ("field", "norm_value"),
         ),
-        lambda: (
-            (
-                index.global_index.coalesce(1)
-                if small
-                else index.global_index.repartition(F.col("field"))
-            )
-            .sortWithinPartitions("field", "norm_value")
-            .write.mode("overwrite")
-            .parquet(f"{path}/global_index")
+        lambda: write_layout(
+            by_field(index.global_index),
+            f"{path}/global_index",
+            sort_by=("field", "norm_value"),
         ),
-        lambda: (
-            (
-                index.reverse_index.coalesce(1)
-                if small
-                else index.reverse_index.repartition(F.col("field"))
-            )
-            .sortWithinPartitions("field", "norm_value")
-            .write.mode("overwrite")
-            .parquet(f"{path}/reverse_index")
+        lambda: write_layout(
+            by_field(index.reverse_index),
+            f"{path}/reverse_index",
+            sort_by=("field", "norm_value"),
         ),
-        lambda: index.metadata.coalesce(1)
-        .write.mode("overwrite")
-        .parquet(f"{path}/metadata"),
-        lambda: (
-            shard(index.doc_fields)
-            .sortWithinPartitions("partition_id", "doc_id")
-            .write.mode("overwrite")
-            .partitionBy("partition_id")
-            .parquet(f"{path}/doc_fields")
+        lambda: write_layout(index.metadata.coalesce(1), f"{path}/metadata"),
+        lambda: write_layout(
+            shard(index.doc_fields), f"{path}/doc_fields", pid, ("doc_id",)
         ),
-        lambda: (
-            shard(index.term_index)
-            .sortWithinPartitions("partition_id", "norm_value")
-            .write.mode("overwrite")
-            .partitionBy("partition_id")
-            .parquet(f"{path}/term_index")
+        lambda: write_layout(
+            shard(index.term_index), f"{path}/term_index", pid, ("norm_value",)
         ),
         _docs_wide_writer(index, path, zorder, small),
-        lambda: (
-            shard(index.documents)
-            .sortWithinPartitions("partition_id", "doc_id")
-            .write.mode("overwrite")
-            .partitionBy("partition_id")
-            .parquet(f"{path}/documents")
+        lambda: write_layout(
+            shard(index.documents), f"{path}/documents", pid, ("doc_id",)
         ),
     ]
     _write_tables(index, writes)
-    # an EMPTY catalog (e.g. compaction after full tombstoning) leaves the
-    # partitionBy table dirs with no data files — unreadable on load (no
-    # schema). Rewrite any such dir as one schema-only file (partition
-    # cols demoted to regular columns; identical read schema). The z
-    # docs_wide writer handles its own store the same way.
-    from accumulo_wikisearch_spark.operators.layout import ensure_readable_store
-
-    for name in (
-        "field_index",
-        "doc_fields",
-        "term_index",
-        "documents",
-        "docs_wide",
-    ):
-        ensure_readable_store(getattr(index, name), f"{path}/{name}")
 
 
 def write_index_bucketed(

@@ -29,6 +29,8 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from accumulo_wikisearch_spark.operators.manifest import _fs
+
 ZBITS = 10  # per-dimension bits → z in [0, 2^20)
 BUCKET_BITS = 4  # top z-bits used as the partition directory key
 _META = "_ZLAYOUT.json"  # layout sidecar beside the store (the _QUANTIZER.json pattern)
@@ -88,10 +90,7 @@ def ensure_readable_store(df: DataFrame, path: str) -> None:
     compaction. Detect that (one FS listing, no job) and rewrite the
     store as one schema-only parquet file with the partition columns as
     regular columns: identical read schema, trivially empty."""
-    sc = df.sparkSession.sparkContext
-    jvm = sc._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(sc._jsc.hadoopConfiguration())
+    fs, p, _ = _fs(df.sparkSession, path)
     if fs.exists(p):
         it = fs.listFiles(p, True)
         while it.hasNext():
@@ -101,13 +100,39 @@ def ensure_readable_store(df: DataFrame, path: str) -> None:
     df.limit(0).write.mode("overwrite").parquet(path)
 
 
+def write_layout(
+    df: DataFrame,
+    path: str,
+    partition_by: tuple[str, ...] = (),
+    sort_by: tuple[str, ...] = (),
+    mode: str = "overwrite",
+) -> None:
+    """THE writer for every partitioned parquet store (the sorted bulk
+    load of SURVEY §4 O19): sort each task's rows by ``(*partition_by,
+    *sort_by)``, write them ``partitionBy(*partition_by)``, then
+    :func:`ensure_readable_store`. The caller picks the distribution
+    (``repartition``, ``coalesce(1)``, ``repartitionByRange``).
+
+    The PARTITION COLUMNS lead the sort: Spark's file writer requires
+    rows ordered by the partition columns and silently inserts its own
+    (unstable) sort when they are not — which destroyed the declared
+    within-file order (discovered r15: written field_index files were
+    NOT norm_value-sorted, so row-group min/max skipping was ineffective
+    on disk catalogs). Leading with them satisfies the writer's required
+    ordering, so ``sort_by`` survives into the files. With no
+    ``sort_by`` the only sort is the partition-column one the writer
+    would insert anyway."""
+    keys = (*partition_by, *sort_by)
+    out = df.sortWithinPartitions(*keys) if keys else df
+    out.write.mode(mode).partitionBy(*partition_by).parquet(path)
+    ensure_readable_store(df, path)
+
+
 def _write_meta(spark: SparkSession, path: str, meta: dict) -> None:
     """Persist the store's layout parameters beside it (underscore-prefixed
     → invisible to Spark's data-file listing; Hadoop FS API so s3/hdfs
     roots work — the _QUANTIZER.json pattern)."""
-    sc = spark.sparkContext
-    p = sc._jvm.org.apache.hadoop.fs.Path(f"{path}/{_META}")
-    fs = p.getFileSystem(sc._jsc.hadoopConfiguration())
+    fs, p, _ = _fs(spark, f"{path}/{_META}")
     out = fs.create(p, True)
     out.write(bytearray(json.dumps(meta).encode()))
     out.close()
@@ -116,10 +141,7 @@ def _write_meta(spark: SparkSession, path: str, meta: dict) -> None:
 def read_meta(spark: SparkSession, path: str) -> dict | None:
     """The store's persisted layout parameters, or None for a pre-metadata
     store (caller must then supply them)."""
-    sc = spark.sparkContext
-    jvm = sc._jvm
-    p = jvm.org.apache.hadoop.fs.Path(f"{path}/{_META}")
-    fs = p.getFileSystem(sc._jsc.hadoopConfiguration())
+    fs, p, jvm = _fs(spark, f"{path}/{_META}")
     if not fs.exists(p):
         return None
     stream = fs.open(p)
@@ -304,22 +326,14 @@ def write_zordered(
     staged = df.withColumn("z", z).withColumn(
         "zb", F.shiftright(F.col("z"), shift).cast("int")
     )
-    # Sort with the PARTITION COLUMNS leading: Spark's file writer
-    # requires rows ordered by the partition columns and silently inserts
-    # its own (unstable) sort when they are not — a bare
-    # sortWithinPartitions("z") produced files whose rows were NOT
-    # z-sorted (verified r15: read-back z columns unsorted), so the z
-    # row-group interval pruning this layout exists for had no min/max
-    # runs to skip on. zb is z's top bits, so the composite sort is the
+    # zb is z's top bits, so the (zb, z) sort write_layout runs is the
     # same total order the range partitioner established.
-    (
-        staged.repartitionByRange(F.col("z"))
-        .sortWithinPartitions(*extra_partition_cols, "zb", "z")
-        .write.mode("overwrite")
-        .partitionBy(*extra_partition_cols, "zb")
-        .parquet(path)
+    write_layout(
+        staged.repartitionByRange(F.col("z")),
+        path,
+        partition_by=(*extra_partition_cols, "zb"),
+        sort_by=("z",),
     )
-    ensure_readable_store(staged, path)
     _write_meta(
         df.sparkSession,
         path,

@@ -52,10 +52,10 @@ from accumulo_wikisearch_spark.config import EngineConfig
 from accumulo_wikisearch_spark.operators.compaction import (
     _ALL_TABLES,
     _STAGED_PREFIX,
-    _fs,
     _publish_delta,
     raw_delta_names,
 )
+from accumulo_wikisearch_spark.operators.manifest import _fs
 
 _REPLICA_MARKER = "_REPLICA.json"
 

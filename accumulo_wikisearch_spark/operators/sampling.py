@@ -15,6 +15,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from accumulo_wikisearch_spark.functions.normalize import HASH60_DUCKDB, hash60_col
+from accumulo_wikisearch_spark.operators.layout import write_layout
+from accumulo_wikisearch_spark.operators.manifest import _fs
 
 BUCKETS = 100
 
@@ -174,12 +176,7 @@ def write_training_shards(
     delivery needs. One hash projection + one shuffle on the shard key."""
     h = hash60_col(F.concat(F.lit(salt), F.col(key).cast("string")))
     sharded = docs.withColumn("shard", (h % n_shards).cast("int"))
-    (
-        sharded.repartition("shard")
-        .write.mode("overwrite")
-        .partitionBy("shard")
-        .parquet(path)
-    )
+    write_layout(sharded.repartition("shard"), path, ("shard",))
     written = (
         sharded.sparkSession.read.parquet(path)
         .select("shard", hash60_col(F.col(key).cast("string")).alias("_h"))
@@ -198,10 +195,7 @@ def write_training_shards(
     ]
     import json
 
-    sc = sharded.sparkSession.sparkContext
-    jvm = sc._jvm
-    p = jvm.org.apache.hadoop.fs.Path(f"{path}/_MANIFEST.json")
-    fs = p.getFileSystem(sc._jsc.hadoopConfiguration())
+    fs, p, _ = _fs(sharded.sparkSession, f"{path}/_MANIFEST.json")
     out = fs.create(p, True)
     out.write(bytearray(json.dumps(manifest, indent=1).encode()))
     out.close()

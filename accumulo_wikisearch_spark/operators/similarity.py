@@ -23,6 +23,8 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from accumulo_wikisearch_spark.functions.normalize import HASH60_DUCKDB
+from accumulo_wikisearch_spark.operators.layout import write_layout
+from accumulo_wikisearch_spark.operators.manifest import _fs
 from accumulo_wikisearch_spark.session import tune_runtime
 
 
@@ -511,9 +513,7 @@ def _write_quantizer(
         meta["codebooks"] = [
             [[int(c), [float(x) for x in v]] for c, v in book] for book in books
         ]
-    sc = spark.sparkContext
-    p = sc._jvm.org.apache.hadoop.fs.Path(f"{path}/_QUANTIZER.json")
-    fs = p.getFileSystem(sc._jsc.hadoopConfiguration())
+    fs, p, _ = _fs(spark, f"{path}/_QUANTIZER.json")
     out = fs.create(p, True)
     out.write(bytearray(json.dumps(meta).encode()))
     out.close()
@@ -531,10 +531,7 @@ def read_quantizer(
     the only copy of the quantizer)."""
     import json
 
-    sc = spark.sparkContext
-    jvm = sc._jvm
-    p = jvm.org.apache.hadoop.fs.Path(f"{path}/_QUANTIZER.json")
-    fs = p.getFileSystem(sc._jsc.hadoopConfiguration())
+    fs, p, jvm = _fs(spark, f"{path}/_QUANTIZER.json")
     stream = fs.open(p)
     try:
         data = bytes(jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
@@ -565,13 +562,8 @@ def write_ivf_index(
     ALSO persists them beside the index as ``_QUANTIZER.json`` (they are
     the 'coarse quantizer' metadata — see :func:`read_quantizer`)."""
     cents = _coarse_cents(emb, n_cells, lloyd_iters, centroids)
-    (
-        ivf_assign(emb, cents)
-        .repartition("cell")
-        .sortWithinPartitions("cell", "vec_id")
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(path)
+    write_layout(
+        ivf_assign(emb, cents).repartition("cell"), path, ("cell",), ("vec_id",)
     )
     _write_quantizer(emb.sparkSession, path, cents)
     return cents
@@ -589,13 +581,12 @@ def append_ivf_index(
     driver entry ann_ivf_append_equiv proves it) — retraining the
     quantizer and rebuilding is the 'major compaction', run when drift
     warrants it."""
-    (
-        ivf_assign(emb_delta, cents)
-        .repartition("cell")
-        .sortWithinPartitions("cell", "vec_id")
-        .write.mode("append")
-        .partitionBy("cell")
-        .parquet(path)
+    write_layout(
+        ivf_assign(emb_delta, cents).repartition("cell"),
+        path,
+        ("cell",),
+        ("vec_id",),
+        mode="append",
     )
 
 
@@ -1173,12 +1164,7 @@ def write_semdedup_store(
     kept = asn.join(
         _dominated_lower_id(asn, threshold_pct), "vec_id", "left_anti"
     )
-    (
-        kept.repartition("cell")
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(f"{path}/kept")
-    )
+    write_layout(kept.repartition("cell"), f"{path}/kept", ("cell",))
     _write_quantizer(emb.sparkSession, path, cents)
     asn.unpersist()
     return cents
@@ -1273,11 +1259,8 @@ def append_semdedup_store(
     survivors = _trained_assign(new_emb, cents).join(
         keep.where(F.col("keep") == 1).select("vec_id"), "vec_id", "left_semi"
     )
-    (
-        survivors.repartition("cell")
-        .write.mode("append")
-        .partitionBy("cell")
-        .parquet(f"{path}/kept")
+    write_layout(
+        survivors.repartition("cell"), f"{path}/kept", ("cell",), mode="append"
     )
 
 
@@ -1612,13 +1595,12 @@ def write_ivf_pq_index(
             _assign_cells_udf(cents)(F.col("embedding")).alias("cell"),
             *_code_select(books, sub_dim),
         )
-    (
-        coded.where(F.col("cell") >= 0)  # drop NULL/ragged vectors, not the job
-        .repartition("cell")
-        .sortWithinPartitions("cell", "vec_id")
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(path)
+    write_layout(
+        # drop NULL/ragged vectors, not the job
+        coded.where(F.col("cell") >= 0).repartition("cell"),
+        path,
+        ("cell",),
+        ("vec_id",),
     )
     _write_quantizer(emb.sparkSession, path, cents, books)
     if quantizers == "trained":
@@ -1721,59 +1703,18 @@ def _books_from_sample(V, m: int, sub_dim: int, n_codes: int):
     return books
 
 
-def _pq_books_refine_exact(
-    q8: DataFrame,
-    books: list[list[tuple[int, list[float]]]],
-    sub_dim: int,
-    lloyd_iters: int,
-):
-    """Integer-exact distributed Lloyd refinement of PQ codebooks — the
-    per-subspace analogue of :func:`_lloyd_refine_exact` (FAISS trains its
-    PQ codebooks with per-subspace k-means the same way): code the
-    quantized corpus (Arrow kernel, narrow), per-(subspace, code, dim)
-    floor(sum/count) means (exact over whole-number inputs), codes with no
-    assigned vectors keep their previous codeword. Each step is one
-    distributed pass; only the m × n_codes × sub_dim codebook tensor is
-    ever collected."""
-    m = len(books)
-    for _ in range(lloyd_iters):
-        coded = q8.select(
-            "v", _pq_code_udf(books, sub_dim)(F.col("v")).alias("codes")
-        ).where(F.col("codes").isNotNull())
-        exploded = coded.select("codes", F.posexplode("v").alias("j", "x"))
-        exploded = exploded.select(
-            F.expr(f"j div {sub_dim}").cast("int").alias("s"),
-            F.expr(f"codes[j div {sub_dim}]").alias("code"),
-            (F.col("j") % sub_dim).alias("jj"),
-            "x",
-        )
-        rows = (
-            exploded.groupBy("s", "code", "jj")
-            .agg(F.floor(F.sum("x") / F.count("*")).alias("m"))
-            .groupBy("s", "code")
-            .agg(F.array_sort(F.collect_list(F.struct("jj", "m"))).alias("ms"))
-            .select("s", "code", F.col("ms.m").alias("mean"))
-            .collect()
-        )
-        new = [dict(book) for book in books]
-        for r in rows:
-            new[r["s"]][r["code"]] = [float(x) for x in r["mean"]]
-        books = [sorted(d.items()) for d in new]
-    return books
-
-
 def _pq_books_refine_sample(
     V,
     books: list[list[tuple[int, list[float]]]],
     sub_dim: int,
     lloyd_iters: int,
 ):
-    """SAMPLE-side per-subspace Lloyd refinement — the numpy twin of
-    :func:`_pq_books_refine_exact`, run on the driver over the bounded
-    training sample (the :func:`_lloyd_refine_sample` rationale: FAISS
-    trains PQ codebooks on a capped sample; the distributed form costs
-    O(corpus × lloyd_iters) scans for books whose fit is set by the
-    sample anyway). Bit-compatible per-row math: coding replicates
+    """SAMPLE-side per-subspace Lloyd refinement of PQ codebooks (FAISS
+    trains them with per-subspace k-means), run on the driver over the
+    bounded training sample (the :func:`_lloyd_refine_sample` rationale:
+    FAISS trains PQ codebooks on a capped sample; a distributed form
+    costs O(corpus × lloyd_iters) scans for books whose fit is set by
+    the sample anyway). Bit-compatible per-row math: coding replicates
     :func:`_pq_code_udf` (squared-L2 argmin, first-min tie → lower code —
     exact integers on the quantized grid), means are floor(sum/count)
     per (subspace, code, dim), empty codes keep their previous codeword.

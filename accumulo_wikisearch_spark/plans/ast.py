@@ -78,11 +78,3 @@ def fields_of(node: Node) -> set[str]:
         if isinstance(n, (Cmp, Between)):
             out.add(n.field)
     return out
-
-
-def has_or(node: Node) -> bool:
-    return any(isinstance(n, Or) for n in walk(node))
-
-
-def has_unfielded(node: Node) -> bool:
-    return any(isinstance(n, Term) for n in walk(node))

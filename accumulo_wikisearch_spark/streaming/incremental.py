@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from accumulo_wikisearch_spark.config import EngineConfig
 from accumulo_wikisearch_spark.operators.ingest import WikisearchIndex, build_index
+from accumulo_wikisearch_spark.operators.manifest import _fs
 
 GI_KEYS = ["norm_value", "field", "partition_id", "language"]
 
@@ -289,8 +290,6 @@ def _seen_batches(
     import re as _re
     from urllib.parse import unquote
 
-    from accumulo_wikisearch_spark.operators.compaction import _fs
-
     global _SEEN_BATCH_RE, _BATCHID_RE
     if _SEEN_BATCH_RE is None:
         _SEEN_BATCH_RE = _re.compile(
@@ -383,8 +382,6 @@ def _write_cdc_anchor(spark, checkpoint: str, body: dict) -> None:
     import json as _json
     import uuid as _uuid
 
-    from accumulo_wikisearch_spark.operators.compaction import _fs
-
     fs, _, jvm = _fs(spark, checkpoint)
     HPath = jvm.org.apache.hadoop.fs.Path
     fs.mkdirs(HPath(checkpoint))
@@ -413,7 +410,6 @@ def _read_cdc_anchor(spark, checkpoint: str) -> dict | None:
     """The newest complete anchor state: ``.new`` when a crashed publish
     left one (it is only ever written complete, and is strictly newer
     than the final it was about to replace), else the final file."""
-    from accumulo_wikisearch_spark.operators.compaction import _fs
     from accumulo_wikisearch_spark.operators.manifest import _open_json
 
     fs, _, jvm = _fs(spark, checkpoint)
@@ -503,7 +499,6 @@ def reconcile_cdc_tail(
     detect it at the next start. Size ``retain_generations`` to the
     slowest consumer's drain-and-restart cadence."""
     from accumulo_wikisearch_spark.operators.compaction import (
-        _fs,
         _visible_file_count,
         raw_delta_names,
     )

@@ -2,6 +2,7 @@
 major compaction (the reference's minor/major compaction cycle with the
 combiner scopes of WikipediaIngester.java:98-135)."""
 
+import shutil
 import tempfile
 
 import pytest
@@ -42,17 +43,26 @@ def _current_sidecar(spark, path):
     return load_zlayout(spark, f"{root}/docs_wide")
 
 
-@pytest.fixture()
-def catalog(spark, tmp_path):
+@pytest.fixture(scope="module")
+def catalog_template(spark, tmp_path_factory):
     """Base index (docs 0-14, all containing 'tok') + two flushed deltas
-    (docs 15-24 'tok', doc 99 'alpha')."""
-    path = str(tmp_path / "index")
+    (docs 15-24 'tok', doc 99 'alpha'), built once per module."""
+    path = str(tmp_path_factory.mktemp("catalog") / "index")
     base = _arts(spark, [(i, "enwiki", "tok common", f"t{i}") for i in range(15)])
     write_index(build_index(base, CFG, SF), path)
     d1 = _arts(spark, [(i, "enwiki", "tok", f"t{i}") for i in range(15, 25)])
     write_delta(build_index(d1, CFG, SF), path, 0)
     d2 = _arts(spark, [(99, "enwiki", "alpha common", "t99")])
     write_delta(build_index(d2, CFG, SF), path, 1)
+    return path
+
+
+@pytest.fixture()
+def catalog(catalog_template, tmp_path):
+    """A private copy of the template catalog (a catalog holds only
+    relative paths, so a copied tree is a valid catalog)."""
+    path = str(tmp_path / "index")
+    shutil.copytree(catalog_template, path)
     return path
 
 

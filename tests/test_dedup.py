@@ -281,3 +281,15 @@ def test_minhash_store_check_is_partition_pruned(spark, sf_dir, tmp_path):
     pruned = [s.split("]", 1)[0] for s in segs[1:]]
     assert any("bk" in s and "IN" in s.upper() for s in pruned), pruned
     assert any("sk" in s and "IN" in s.upper() for s in pruned), pruned
+
+
+def test_minhash_store_written_empty_stays_readable(spark, sf_dir, tmp_path):
+    """A store written from an empty frame must still be checkable: the
+    batch check reads ``bands/``, which a bare partitioned write of no
+    rows leaves without a schema."""
+    from accumulo_wikisearch_spark.operators import dedup as D
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    path = str(tmp_path / "empty_store")
+    D.write_minhash_store(docs.where(F.lit(False)), path)
+    assert D.near_dups_vs_store(spark, docs, path).count() == 0

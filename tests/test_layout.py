@@ -697,22 +697,26 @@ def test_literal_key_parser_parity_with_spark(spark):
             assert py_k == spark_k, (r["s"], spark_k, py_k)
 
 
-def test_written_files_keep_declared_sort_order(spark, tmp_path):
-    """Spark's file writer silently re-sorts by the partition columns
-    when the data is not already ordered by them (and FoldablePropagation
-    can strip literal sort keys first) — which destroyed the within-file
-    sort every partitioned layout promises (r15). Pin: z-store files are
-    z-sorted, flat field_index files are (field, norm_value)-sorted, and
-    IVF / IVF-PQ cell files are vec_id-sorted on disk."""
+@pytest.fixture(scope="module")
+def sorted_stores(spark, tmp_path_factory):
+    """One write of every layout with a declared within-file order:
+    {case: (data files, sort columns)} for the read-back below."""
     import glob
     import random
-
-    import pyarrow.parquet as pq
-    from pyspark.sql import functions as F
 
     from accumulo_wikisearch_spark.config import EngineConfig
     from accumulo_wikisearch_spark.operators.ingest import build_index, write_index
     from accumulo_wikisearch_spark.operators.layout import ZLayout
+    from accumulo_wikisearch_spark.operators.similarity import (
+        append_ivf_index,
+        write_ivf_index,
+        write_ivf_pq_index,
+    )
+
+    root = tmp_path_factory.mktemp("sorted_stores")
+
+    def files(store):
+        return set(glob.glob(f"{store}/**/part-*.parquet", recursive=True))
 
     rows = [(i, "default", f"w{i % 7} t{i % 11}", i % 97, i % 89) for i in range(4000)]
     arts = spark.createDataFrame(
@@ -721,41 +725,70 @@ def test_written_files_keep_declared_sort_order(spark, tmp_path):
     idx = build_index(
         arts, EngineConfig(), {"ID": "id", "XF": "xf", "YF": "yf"}, unique_ids=True
     )
-    zdir = str(tmp_path / "z")
+    zdir, flat = str(root / "z"), str(root / "flat")
     write_index(idx, zdir, zorder=ZLayout("XF", "YF", "int", "int"))
-    zfiles = glob.glob(f"{zdir}/docs_wide/**/part-*.parquet", recursive=True)
-    assert zfiles
-    for f in zfiles:
-        zs = pq.read_table(f, columns=["z"])["z"].to_pylist()
-        assert zs == sorted(zs), f"unsorted z store file {f}"
-
-    flat = str(tmp_path / "flat")
     write_index(idx, flat)
-    fifiles = glob.glob(f"{flat}/field_index/partition_id=*/part-*.parquet")
-    assert fifiles
-    for f in fifiles:
-        t = pq.read_table(f, columns=["field", "norm_value"])
-        pairs = list(zip(t["field"].to_pylist(), t["norm_value"].to_pylist()))
-        assert pairs == sorted(pairs), f"unsorted field_index file {f}"
-
-    from accumulo_wikisearch_spark.operators.similarity import (
-        write_ivf_index,
-        write_ivf_pq_index,
-    )
+    out = {"z_docs_wide": (files(f"{zdir}/docs_wide"), ["z"])}
+    for table, cols in [
+        ("field_index", ["field", "norm_value"]),
+        ("doc_fields", ["doc_id"]),
+        ("term_index", ["norm_value"]),
+        ("documents", ["doc_id"]),
+        ("docs_wide", ["doc_id"]),
+        ("global_index", ["field", "norm_value"]),
+        ("reverse_index", ["field", "norm_value"]),
+    ]:
+        out[table] = (files(f"{flat}/{table}"), cols)
 
     rng = random.Random(7)
     ids = list(range(3000))
     rng.shuffle(ids)  # arrival order is NOT vec_id order
-    emb = spark.createDataFrame(
-        [(i, [rng.uniform(-1, 1) for _ in range(64)]) for i in ids],
-        "vec_id long, embedding array<float>",
-    )
-    ivf, ivfpq = str(tmp_path / "ivf"), str(tmp_path / "ivfpq")
-    write_ivf_index(emb, ivf, n_cells=8, lloyd_iters=1)
-    write_ivf_pq_index(emb, ivfpq, n_cells=8, quantizers="seed")
-    for store in (ivf, ivfpq):
-        files = glob.glob(f"{store}/cell=*/part-*.parquet")
-        assert files
-        for f in files:
-            vids = pq.read_table(f, columns=["vec_id"])["vec_id"].to_pylist()
-            assert vids == sorted(vids), f"unsorted IVF cell file {f}"
+
+    def emb(vec_ids):
+        return spark.createDataFrame(
+            [(i, [rng.uniform(-1, 1) for _ in range(64)]) for i in vec_ids],
+            "vec_id long, embedding array<float>",
+        )
+
+    ivf, ivfpq = str(root / "ivf"), str(root / "ivfpq")
+    cents = write_ivf_index(emb(ids[:2500]), ivf, n_cells=8, lloyd_iters=1)
+    base = files(ivf)
+    append_ivf_index(emb(ids[2500:]), ivf, cents)
+    out["ivf"] = (base, ["vec_id"])
+    out["ivf_append"] = (files(ivf) - base, ["vec_id"])
+    write_ivf_pq_index(emb(ids), ivfpq, n_cells=8, quantizers="seed")
+    out["ivf_pq"] = (files(ivfpq), ["vec_id"])
+    return out
+
+
+@pytest.mark.parametrize(
+    "case",
+    [
+        "field_index",
+        "doc_fields",
+        "term_index",
+        "documents",
+        "docs_wide",
+        "global_index",
+        "reverse_index",
+        "z_docs_wide",
+        "ivf",
+        "ivf_append",
+        "ivf_pq",
+    ],
+)
+def test_written_files_keep_declared_sort_order(sorted_stores, case):
+    """Spark's file writer silently re-sorts by the partition columns
+    when the data is not already ordered by them (and FoldablePropagation
+    can strip literal sort keys first) — which destroyed the within-file
+    sort every partitioned layout promises (r15). Pin: every data file of
+    every store written through ``write_layout`` with a declared order
+    reads back in that order (pyarrow, file by file)."""
+    import pyarrow.parquet as pq
+
+    files, cols = sorted_stores[case]
+    assert files
+    for f in sorted(files):
+        t = pq.read_table(f, columns=cols)
+        keys = list(zip(*(t[c].to_pylist() for c in cols)))
+        assert keys == sorted(keys), f"unsorted {case} file {f}"

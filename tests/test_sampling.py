@@ -125,3 +125,12 @@ def test_domain_mixture_epoch_counts(spark):
     # determinism
     again = domain_mixture(docs, "source", {"a": 250, "b": 40}).collect()
     assert {tuple(r) for r in again} == {tuple(r) for r in out}
+
+
+def test_write_training_shards_of_empty_frame(spark, sf_dir, tmp_path):
+    """An empty corpus exports zero shards instead of failing on the
+    read-back of a schema-less directory."""
+    from accumulo_wikisearch_spark.operators.sampling import write_training_shards
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").where(F.lit(False))
+    assert write_training_shards(docs, str(tmp_path / "empty"), n_shards=4) == []

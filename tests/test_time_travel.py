@@ -6,6 +6,8 @@ Snapshot history is sized by the same ``retain_generations`` knob as
 reader grace; reading a retired version raises with the retained list.
 """
 
+import shutil
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -34,16 +36,26 @@ def _delta(spark, path, ids, batch):
     write_delta(build_index(d, CFG, SF), path, batch)
 
 
-@pytest.fixture()
-def versioned_catalog(spark, tmp_path):
-    """Catalog with two snapshots: v1 = docs 0-9, v2 = docs 0-14."""
-    path = str(tmp_path / "tt")
+@pytest.fixture(scope="module")
+def versioned_template(spark, tmp_path_factory):
+    """Catalog with two snapshots: v1 = docs 0-9, v2 = docs 0-14, built
+    once per module."""
+    path = str(tmp_path_factory.mktemp("versioned") / "tt")
     base = _arts(spark, [(i, "enwiki", "tok base", f"t{i}") for i in range(5)])
     write_index(build_index(base, CFG, SF), path)
     _delta(spark, path, range(5, 10), "b0")
     compact_index(spark, path, CFG)  # v1
     _delta(spark, path, range(10, 15), "b1")
     compact_index(spark, path, CFG)  # v2
+    return path
+
+
+@pytest.fixture()
+def versioned_catalog(versioned_template, tmp_path):
+    """A private copy of the template (manifests hold relative generation
+    paths, so a copied tree is a valid catalog)."""
+    path = str(tmp_path / "tt")
+    shutil.copytree(versioned_template, path)
     return path
 
 
