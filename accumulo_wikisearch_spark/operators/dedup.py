@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 
 from accumulo_wikisearch_spark.functions.normalize import HASH60_DUCKDB, hash60_col
 from accumulo_wikisearch_spark.operators.layout import write_layout
+from accumulo_wikisearch_spark.operators.similarity import _as_double, _cosine
 from accumulo_wikisearch_spark.session import tune_runtime
 
 TOK = "string_split(text,' ')"
@@ -890,21 +891,6 @@ def remove_duplicated_spans(
 # ---------------------------------------------------------------------------
 
 
-def _vecs(emb: DataFrame) -> DataFrame:
-    return emb.select(
-        F.col("vec_id"),
-        F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("v"),
-    )
-
-
-def _cos(a, b):
-    dot = F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, x: s + x)
-    norm = lambda c: F.sqrt(F.aggregate(c, F.lit(0.0), lambda s, x: s + x * x))
-    # NULL (not ANSI DIVIDE_BY_ZERO) for zero-norm vectors: a threshold
-    # compare on NULL is NULL → the pair drops, the job survives
-    return dot / F.nullif(norm(a) * norm(b), F.lit(0.0))
-
-
 def exact_vector_duplicates(emb: DataFrame) -> DataFrame:
     """Byte-identical embedding vectors: (vec_id, canonical_id) — the
     exact-dedup PRE-PASS the banded near-dup's ``max_bucket`` caveat
@@ -940,10 +926,12 @@ def embedding_near_dup_pairs_exact(emb: DataFrame, threshold_pct: int = 90) -> D
     """Pairs of embeddings with cosine ≥ threshold_pct/100 — brute-force
     all-pairs. O(n²): the correctness oracle and recall baseline ONLY; the
     scale path is :func:`embedding_near_dup_pairs` (banded sign-LSH)."""
-    v = _vecs(emb)
+    v = emb.select("vec_id", _as_double(F.col("embedding")).alias("v"))
     a = v.alias("a")
     b = v.alias("b")
-    cos = _cos(F.col("a.v"), F.col("b.v"))
+    # NULL (not ANSI DIVIDE_BY_ZERO) for zero-norm vectors: a threshold
+    # compare on NULL is NULL → the pair drops, the job survives
+    cos = _cosine(F.col("a.v"), F.col("b.v"))
     return (
         a.crossJoin(b)
         .where(F.col("a.vec_id") < F.col("b.vec_id"))
@@ -1040,7 +1028,7 @@ def embedding_near_dup_pairs(
     exact-dedup pre-pass (hash the vector bytes), not the LSH path. The
     banding and the cap are deterministic and replayed identically by the
     SQL oracle, so the driver check stays hash-exact at any recall."""
-    v = _vecs(emb)
+    v = emb.select("vec_id", _as_double(F.col("embedding")).alias("v"))
     sig = v.select("vec_id", _band_buckets_udf()(F.col("v")).alias("bks"))
     e = sig.select("vec_id", F.posexplode("bks").alias("band", "bucket"))
     if max_bucket is not None:

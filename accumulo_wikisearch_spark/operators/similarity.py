@@ -61,6 +61,31 @@ def _cosine(a: Column, b: Column) -> Column:
     return dot / F.nullif(n(a) * n(b), F.lit(0.0))
 
 
+def _qv(queries: DataFrame) -> DataFrame:
+    """(query_id, qv DOUBLE[]) — the float query side of the ANN paths."""
+    return queries.select("query_id", _as_double(F.col("qv")).alias("qv"))
+
+
+def _score_rank(cands: DataFrame, k: int, m: int | None = None) -> DataFrame:
+    """Score and rank candidate pairs — the one tail of every cosine and
+    ADC top-k (partition-local scoring, then the shared :func:`_rank_topk`
+    merge). ``cands`` holds one row per (query_id, candidate vec_id);
+    self-matches are dropped. Without ``m`` the score is the cosine of
+    (qv, v), best first; with ``m`` it is the ADC distance over the LUT
+    columns l0… and the codes code_0…code_{m-1}, smallest first, and
+    uncoded (malformed-vector) rows are dropped — their NULL distance
+    would rank first."""
+    if m is None:
+        score, order = _cosine(F.col("qv"), F.col("v")), F.desc
+    else:
+        cands = cands.where(F.col("code_0").isNotNull())
+        score, order = _adc_lut_dist(m), F.asc
+    scored = cands.where(F.col("vec_id") != F.col("query_id")).select(
+        "query_id", F.col("vec_id").alias("neighbor_id"), score.alias("score")
+    )
+    return _rank_topk(scored, k, order("score"))
+
+
 def topk_bruteforce(
     emb: DataFrame, queries: DataFrame, k: int = 10
 ) -> DataFrame:
@@ -70,15 +95,8 @@ def topk_bruteforce(
     (query_id, neighbor_id, rank) with deterministic tie-break on
     neighbor_id. Self-matches (same id) are excluded.
     """
-    corpus = emb.select(
-        F.col("vec_id").alias("neighbor_id"), _as_double(F.col("embedding")).alias("v")
-    )
-    q = queries.select("query_id", _as_double(F.col("qv")).alias("qv"))
-    scored = corpus.join(F.broadcast(q)).where(F.col("neighbor_id") != F.col("query_id"))
-    scored = scored.select(
-        "query_id", "neighbor_id", _cosine(F.col("qv"), F.col("v")).alias("cos")
-    )
-    return _rank_topk(scored, k, F.desc("cos"))
+    corpus = emb.select("vec_id", _as_double(F.col("embedding")).alias("v"))
+    return _score_rank(corpus.join(F.broadcast(_qv(queries))), k)
 
 
 def self_queries(emb: DataFrame, n: int = 5) -> DataFrame:
@@ -209,7 +227,7 @@ def _lsh_topk(
     planes = _hyperplanes(dim, nbits)
     bucket = _lsh_bucket_udf(planes)
     corpus = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
+        "vec_id",
         _as_double(F.col("embedding")).alias("v"),
         bucket(F.col("embedding")).alias("bucket"),
     ).where(F.col("bucket") >= 0)  # drop NULL/ragged vectors, not the job
@@ -227,12 +245,7 @@ def _lsh_topk(
             ],
         )
         q = q.select("query_id", "qv", F.explode(probe_set).alias("bucket"))
-    scored = (
-        corpus.join(F.broadcast(q), "bucket")
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", _cosine(F.col("qv"), F.col("v")).alias("cos"))
-    )
-    return _rank_topk(scored, k, F.desc("cos"))
+    return _score_rank(corpus.join(F.broadcast(q), "bucket"), k)
 
 
 # ---------------------------------------------------------------------------
@@ -378,6 +391,29 @@ def _cell_scores(v: Column, cents: Column) -> Column:
     )
 
 
+def _probes(
+    qv: DataFrame, cents: list[tuple[int, list[float]]], nprobe: int
+) -> DataFrame:
+    """(query_id, qv, cell): one row per probed cell — the ``nprobe``
+    centroids nearest each query by cosine, ties to the higher cell
+    (array_sort over (score, cell) structs, reversed). ``qv`` is a
+    (query_id, qv DOUBLE[]) frame."""
+    scores = _cell_scores(F.col("qv"), _centroid_lit(cents))
+    nearest = F.slice(F.reverse(F.array_sort(scores)), 1, nprobe)
+    return qv.select("query_id", "qv", F.explode(nearest["cell"]).alias("cell"))
+
+
+def _assigned(
+    vecs: DataFrame, by: Column, cents: list[tuple[int, list[float]]], *cols: Column
+) -> DataFrame:
+    """(vec_id, *cols, cell): each row's cell is the nearest centroid of
+    ``by`` (the Arrow kernel); rows the kernel cannot assign (NULL,
+    ragged or zero-norm vectors → cell -1) are dropped, not the job."""
+    return vecs.select(
+        "vec_id", *cols, _assign_cells_udf(cents)(by).alias("cell")
+    ).where(F.col("cell") >= 0)
+
+
 def ivf_assign(emb: DataFrame, centroids: list[tuple[int, list[float]]]) -> DataFrame:
     """Assign each vector to its nearest centroid (coarse quantizer).
 
@@ -386,55 +422,36 @@ def ivf_assign(emb: DataFrame, centroids: list[tuple[int, list[float]]]) -> Data
     assignment is one pass; a partitioned-by-cell layout then makes each
     query touch only probed cells.
     """
-    v = _as_double(F.col("embedding"))
-    assign = _assign_cells_udf(centroids)
-    return emb.select(
-        F.col("vec_id"), v.alias("v"), assign(F.col("embedding")).alias("cell")
-    ).where(F.col("cell") >= 0)  # drop NULL/ragged vectors, not the job
+    v = _as_double(F.col("embedding")).alias("v")
+    return _assigned(emb, F.col("embedding"), centroids, v)
 
 
-def take_centroids(
-    emb: DataFrame, n_cells: int = 16, lloyd_iters: int = 2
-) -> list[tuple[int, list[float]]]:
-    """Deterministic coarse centroids: first n_cells corpus vectors as seeds
-    (k-means|| stand-in), refined with ``lloyd_iters`` Lloyd steps.
-
-    Each step is one distributed pass (assign via the literal-centroid map,
-    then groupBy(cell) → elementwise mean with ``posexplode``); only the
-    n_cells × dim centroid matrix is ever collected. Empty cells keep their
-    previous centroid."""
+def take_centroids(emb: DataFrame, n_cells: int = 16) -> list[tuple[int, list[float]]]:
+    """Deterministic seed centroids: the first n_cells corpus vectors by
+    vec_id, verbatim, labelled 0..n_cells-1 (a k-means|| stand-in the SQL
+    oracles replay; the refined quantizers are
+    :func:`take_centroids_trained` and :func:`take_centroids_lloyd_exact`)."""
     rows = emb.orderBy("vec_id").limit(n_cells).collect()
-    cents = [(i, [float(x) for x in r["embedding"]]) for i, r in enumerate(rows)]
-    for _ in range(lloyd_iters):
-        assigned = ivf_assign(emb, cents)
-        means = (
-            assigned.select("cell", F.posexplode(F.col("v")).alias("dim", "x"))
-            .groupBy("cell", "dim")
-            .agg(F.avg("x").alias("m"))
-            .groupBy("cell")
-            .agg(F.array_sort(F.collect_list(F.struct("dim", "m"))).alias("ms"))
-            .select("cell", F.col("ms.m").alias("mean"))
-            .collect()
-        )
-        new = dict(cents)
-        for r in means:
-            new[r["cell"]] = [float(x) for x in r["mean"]]
-        cents = sorted(new.items())
-    return cents
+    return [(i, [float(x) for x in r["embedding"]]) for i, r in enumerate(rows)]
 
 
 def _coarse_cents(
-    emb: DataFrame, n_cells: int, lloyd_iters: int, centroids: str
+    emb: DataFrame,
+    n_cells: int,
+    lloyd_iters: int,
+    centroids: str,
+    sample_cap: int = 2048,
 ) -> list[tuple[int, list[float]]]:
-    """Centroid-selection switch shared by the IVF entry points:
-    ``"trained"`` (the DEFAULT everywhere) = hash-sample + farthest-point
-    + integer-exact Lloyd on the int8 grid (:func:`take_centroids_trained`
-    — seed rows degrade recall as the corpus outgrows its first n rows);
-    ``"seed"`` = first-n rows + float Lloyd (:func:`take_centroids`),
-    kept as the simpler SQL-replayable twin."""
+    """Centroid-selection switch shared by the IVF and SemDeDup entry
+    points: ``"trained"`` (the DEFAULT everywhere) = hash-sample +
+    farthest-point + integer-exact Lloyd on the int8 grid
+    (:func:`take_centroids_trained` — seed rows degrade recall as the
+    corpus outgrows its first n rows); ``"seed"`` = the first n rows
+    (:func:`take_centroids`; ``lloyd_iters`` is ignored), kept as the
+    simpler SQL-replayable twin."""
     if centroids == "trained":
-        return take_centroids_trained(emb, n_cells, lloyd_iters)
-    return take_centroids(emb, n_cells, lloyd_iters)
+        return take_centroids_trained(emb, n_cells, lloyd_iters, sample_cap)
+    return take_centroids(emb, n_cells)
 
 
 def topk_ivf(
@@ -463,32 +480,15 @@ def topk_ivf(
     ``centroids="trained"`` (the DEFAULT) uses the sampled
     farthest-point + exact-Lloyd quantizer — deterministic end-to-end
     (the ann_topk_ivf_default oracle replays it against the float
-    corpus). ``centroids="seed"`` with ``lloyd_iters=0`` keeps the first
-    n_cells vectors verbatim — the simplest ANSI-SQL twin; its float
-    Lloyd-refined form (seed + lloyd_iters>0) is covered by pytest
-    recall assertions only (float means are partial-aggregation-order
-    dependent), and the deterministic refined-seed path with its own
-    oracle is :func:`topk_ivf_lloyd_exact`.
+    corpus). ``centroids="seed"`` keeps the first n_cells vectors
+    verbatim and ignores ``lloyd_iters`` — the simplest ANSI-SQL twin;
+    the deterministic refined-seed path with its own oracle is
+    :func:`topk_ivf_lloyd_exact`.
     """
     cents = _coarse_cents(emb, n_cells, lloyd_iters, centroids)
-    corpus = ivf_assign(
-        emb if candidates is None else candidates, cents
-    ).select(F.col("vec_id").alias("neighbor_id"), "v", "cell")
-    qv = queries.select("query_id", _as_double(F.col("qv")).alias("qv"))
-    # per-query probe cells: rank centroids by cosine, take nprobe
-    scores = _cell_scores(F.col("qv"), _centroid_lit(cents))
-    probes = qv.select(
-        "query_id",
-        "qv",
-        F.slice(F.reverse(F.array_sort(scores)), 1, nprobe).alias("probes"),
-    ).select("query_id", "qv", F.explode(F.col("probes.cell")).alias("cell"))
-    scored = corpus.join(F.broadcast(probes), "cell").where(
-        F.col("neighbor_id") != F.col("query_id")
-    )
-    scored = scored.select(
-        "query_id", "neighbor_id", _cosine(F.col("qv"), F.col("v")).alias("cos")
-    )
-    return _rank_topk(scored, k, F.desc("cos"))
+    corpus = ivf_assign(emb if candidates is None else candidates, cents)
+    probes = _probes(_qv(queries), cents, nprobe)
+    return _score_rank(corpus.join(F.broadcast(probes), "cell"), k)
 
 
 def _write_quantizer(
@@ -591,13 +591,14 @@ def append_ivf_index(
 
 
 def delete_ivf_vectors(spark: SparkSession, path: str, vec_ids) -> None:
-    """Tombstone delete for the written IVF layout — the delete half of
-    the LSM maintenance pair (append_ivf_index is the insert half):
-    appends ids to ``_tombstones`` under the index root. Underscore-
-    prefixed paths are invisible to Spark's file listing, so the main
-    corpus read is untouched; :func:`topk_ivf_on_disk` anti-joins the
-    (broadcast, tiny) tombstone set out at query time. A rewrite without
-    tombstoned rows is the 'major compaction', exactly as in
+    """Tombstone delete for a written IVF or IVF-PQ layout — the delete
+    half of the LSM maintenance pair (append_ivf_index is the insert
+    half): appends ids to ``_tombstones`` under the index root.
+    Underscore-prefixed paths are invisible to Spark's file listing, so
+    the main corpus read is untouched; both on-disk readers
+    (:func:`topk_ivf_on_disk`, :func:`topk_ivf_pq_on_disk`) anti-join
+    the (broadcast, tiny) tombstone set out at query time. A rewrite
+    without tombstoned rows is the 'major compaction', exactly as in
     operators/compaction.py."""
     spark.createDataFrame(
         [(int(v),) for v in vec_ids], "vec_id bigint"
@@ -605,19 +606,32 @@ def delete_ivf_vectors(spark: SparkSession, path: str, vec_ids) -> None:
 
 
 def _ivf_tombstones(spark: SparkSession, path: str) -> DataFrame | None:
-    from pyspark.errors import AnalysisException
+    """The ``_tombstones`` set of an index root, or None when nothing was
+    ever deleted. One Hadoop FS existence call per query (s3/hdfs URIs
+    work too) — far cheaper than failing a read of the missing dir. Any
+    FS error propagates: swallowing it would silently serve deleted
+    vectors."""
+    fs, p, _ = _fs(spark, f"{path}/_tombstones")
+    return spark.read.parquet(f"{path}/_tombstones") if fs.exists(p) else None
 
-    try:
-        # schema inference lists the path eagerly, so a missing tombstone
-        # dir surfaces here — FS-agnostic (works for s3/hdfs URIs too).
-        # ONLY path-not-found means "no deletes"; any other failure
-        # (permissions, transient FS error, corrupt footer) must
-        # propagate — swallowing it would silently serve deleted vectors.
-        return spark.read.parquet(f"{path}/_tombstones")
-    except AnalysisException as e:
-        if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
-            return None
-        raise
+
+def _read_probed_cells(
+    spark: SparkSession, path: str, probes: DataFrame
+) -> DataFrame | None:
+    """The live rows of a written cell-partitioned layout (IVF or IVF-PQ)
+    that ``probes`` reach. The (tiny) union of probed cells is collected
+    so the ``isin`` filter prunes partitions at scan time (verify
+    PartitionFilters in the plan); tombstoned vec_ids
+    (:func:`delete_ivf_vectors`) are anti-joined out. None for an empty
+    query set: isin() with no values would throw."""
+    cells = sorted({r["cell"] for r in probes.select("cell").distinct().collect()})
+    if not cells:
+        return None
+    corpus = spark.read.parquet(path).where(F.col("cell").isin(*cells))
+    tombs = _ivf_tombstones(spark, path)
+    if tombs is not None:
+        corpus = corpus.join(F.broadcast(tombs), "vec_id", "left_anti")
+    return corpus
 
 
 def topk_ivf_on_disk(
@@ -628,39 +642,14 @@ def topk_ivf_on_disk(
     k: int = 10,
     nprobe: int = 4,
 ) -> DataFrame:
-    """ANN top-k against a written IVF layout. The probe-cell filter is a
-    partition filter on the parquet read — only nprobe/n_cells of the
-    corpus files are touched (verify PartitionFilters in the plan).
-    Tombstoned vec_ids (:func:`delete_ivf_vectors`) are anti-joined out."""
-    corpus = spark.read.parquet(path).select(
-        F.col("vec_id").alias("neighbor_id"), "v", "cell"
-    )
-    tombs = _ivf_tombstones(spark, path)
-    if tombs is not None:
-        corpus = corpus.join(
-            F.broadcast(tombs.withColumnRenamed("vec_id", "neighbor_id")),
-            "neighbor_id",
-            "left_anti",
-        )
-    qv = queries.select("query_id", _as_double(F.col("qv")).alias("qv"))
-    scores = _cell_scores(F.col("qv"), _centroid_lit(cents))
-    probed = qv.select(
-        "query_id",
-        "qv",
-        F.slice(F.reverse(F.array_sort(scores)), 1, nprobe).alias("probes"),
-    ).select("query_id", "qv", F.explode(F.col("probes.cell")).alias("cell"))
-    # collect the (tiny) union of probed cells so the IN-filter prunes
-    # partitions at scan time; queries themselves broadcast into the join
-    cells = sorted({r["cell"] for r in probed.select("cell").distinct().collect()})
-    if not cells:  # empty query set: isin() with no values would throw
+    """ANN top-k against a written IVF layout: only the probed cells'
+    files are read, tombstoned vec_ids are skipped
+    (:func:`_read_probed_cells`)."""
+    probes = _probes(_qv(queries), cents, nprobe)
+    corpus = _read_probed_cells(spark, path, probes)
+    if corpus is None:
         return _empty_topk(spark)
-    scored = (
-        corpus.where(F.col("cell").isin(*cells))
-        .join(F.broadcast(probed), "cell")
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", _cosine(F.col("qv"), F.col("v")).alias("cos"))
-    )
-    return _rank_topk(scored, k, F.desc("cos"))
+    return _score_rank(corpus.join(F.broadcast(probes), "cell"), k)
 
 
 # ---------------------------------------------------------------------------
@@ -751,15 +740,14 @@ def _quantized_vecs(emb: DataFrame) -> DataFrame:
 def _lloyd_refine_exact(
     q8: DataFrame, cents: list[tuple[int, list[float]]], lloyd_iters: int
 ) -> list[tuple[int, list[float]]]:
-    """The integer-exact distributed Lloyd loop shared by the seeded and
-    trained quantizers: assign (Arrow kernel, narrow), per-(cell, dim)
-    floor(sum/count) means (exact over whole-number inputs), empty cells
-    keep their previous centroid. Each step is one distributed pass; only
-    the n_cells × dim centroid matrix is ever collected."""
+    """The integer-exact distributed Lloyd loop of
+    :func:`take_centroids_lloyd_exact`: assign (Arrow kernel, narrow),
+    per-(cell, dim) floor(sum/count) means (exact over whole-number
+    inputs), empty cells keep their previous centroid. Each step is one
+    distributed pass; only the n_cells × dim centroid matrix is ever
+    collected. Malformed rows are dropped, so they never pollute means."""
     for _ in range(lloyd_iters):
-        assigned = q8.select(
-            "v", _assign_cells_udf(cents)(F.col("v")).alias("cell")
-        ).where(F.col("cell") >= 0)  # malformed rows must not pollute means
+        assigned = _assigned(q8, F.col("v"), cents, F.col("v"))
         means = (
             assigned.select("cell", F.posexplode(F.col("v")).alias("dim", "x"))
             .groupBy("cell", "dim")
@@ -866,21 +854,34 @@ def take_centroids_trained(
     # no persist needed: the hash filter is on vec_id only, so Catalyst
     # pushes it below the quantize projection — only sampled rows are
     # ever quantized, in ONE scan
-    return _take_centroids_trained_q8(
-        _quantized_vecs(emb), n_cells, lloyd_iters, sample_cap
-    )
+    V = _hash_sample_q8(_quantized_vecs(emb), sample_cap)
+    return _trained_cents(V, n_cells, lloyd_iters)
 
 
-def _take_centroids_trained_q8(
-    q8: DataFrame, n_cells: int, lloyd_iters: int, sample_cap: int
+def _trained_cents(
+    V, n_cells: int, lloyd_iters: int
 ) -> list[tuple[int, list[float]]]:
-    """Training body over an (ideally persisted) quantized view — shared
-    by the callers that keep using ``q8`` afterwards and persist it once
-    themselves."""
-    V = _hash_sample_q8(q8, sample_cap)
-    chosen = _greedy_farthest(V, min(n_cells, len(V)))
-    cents = [(j, [float(x) for x in V[i]]) for j, i in enumerate(chosen)]
+    """Coarse centroids trained on the hash sample ``V``: greedy
+    farthest-point seeds labelled 0.. in pick order, then
+    ``lloyd_iters`` sample-side Lloyd steps."""
+    seeds = _greedy_farthest(V, min(n_cells, len(V)))
+    cents = [(j, [float(x) for x in V[i]]) for j, i in enumerate(seeds)]
     return _lloyd_refine_sample(V, cents, lloyd_iters)
+
+
+def _trained_books(
+    V, m: int, sub_dim: int, n_codes: int, lloyd_iters: int
+) -> list[list[tuple[int, list[float]]]]:
+    """PQ codebooks trained on the hash sample ``V``: per subspace, greedy
+    farthest-point seed codewords over that slice (the subvector
+    distributions differ, so the seeds do too), then ``lloyd_iters``
+    sample-side Lloyd steps (:func:`_pq_books_refine_sample`)."""
+    books = []
+    for s in range(m):
+        X = V[:, s * sub_dim : (s + 1) * sub_dim]
+        seeds = _greedy_farthest(X, min(n_codes, len(X)))
+        books.append([(c, [float(x) for x in X[i]]) for c, i in enumerate(seeds)])
+    return _pq_books_refine_sample(V, books, sub_dim, lloyd_iters)
 
 
 def _hash_sample_q8(q8: DataFrame, sample_cap: int):
@@ -959,40 +960,10 @@ def topk_ivf_trained(
     scope = Scope()
     # ONE persisted quantized view feeds training AND the probe/re-rank
     q8 = scope.persist(_quantized_vecs(emb))
-    cents = _take_centroids_trained_q8(q8, n_cells, lloyd_iters, sample_cap)
-    return scope.attach(_q8_ivf_topk(q8, cents, k, nprobe, nq))
-
-
-def _q8_ivf_topk(
-    q8: DataFrame,
-    cents: list[tuple[int, list[float]]],
-    k: int,
-    nprobe: int,
-    nq: int,
-) -> DataFrame:
-    """Shared probe/re-rank tail of the quantized-corpus IVF variants:
-    kernel cell assignment, self-queries (vec_id < nq), nprobe-ranked
-    probe cells, exact-cosine re-rank."""
-    corpus = q8.select(
-        F.col("vec_id").alias("neighbor_id"),
-        "v",
-        _assign_cells_udf(cents)(F.col("v")).alias("cell"),
-    ).where(F.col("cell") >= 0)  # drop NULL/ragged vectors, not the job
-    qv = q8.where(F.col("vec_id") < nq).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
-    scores = _cell_scores(F.col("qv"), _centroid_lit(cents))
-    probes = qv.select(
-        "query_id",
-        "qv",
-        F.slice(F.reverse(F.array_sort(scores)), 1, nprobe).alias("probes"),
-    ).select("query_id", "qv", F.explode(F.col("probes.cell")).alias("cell"))
-    scored = (
-        corpus.join(F.broadcast(probes), "cell")
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", _cosine(F.col("qv"), F.col("v")).alias("cos"))
-    )
-    return _rank_topk(scored, k, F.desc("cos"))
+    cents = _trained_cents(_hash_sample_q8(q8, sample_cap), n_cells, lloyd_iters)
+    corpus = _assigned(q8, F.col("v"), cents, F.col("v"))
+    probes = _probes(_q8_queries(q8, nq), cents, nprobe)
+    return scope.attach(_score_rank(corpus.join(F.broadcast(probes), "cell"), k))
 
 
 def topk_ivf_lloyd_exact(
@@ -1013,9 +984,11 @@ def topk_ivf_lloyd_exact(
     from accumulo_wikisearch_spark.operators._scoped import Scope
 
     scope = Scope()
-    q8 = scope.persist(_quantized_vecs(emb))  # see take_centroids_trained
+    q8 = scope.persist(_quantized_vecs(emb))  # see topk_ivf_trained
     cents = take_centroids_lloyd_exact(q8, n_cells, lloyd_iters)
-    return scope.attach(_q8_ivf_topk(q8, cents, k, nprobe, nq))
+    corpus = _assigned(q8, F.col("v"), cents, F.col("v"))
+    probes = _probes(_q8_queries(q8, nq), cents, nprobe)
+    return scope.attach(_score_rank(corpus.join(F.broadcast(probes), "cell"), k))
 
 
 # ---------------------------------------------------------------------------
@@ -1081,17 +1054,12 @@ def semdedup_keep(
     if cents is None:
         if n_cells is None:
             n_cells = auto_n_cells(emb.count(), target_cell)
-        if centroids == "trained":
-            cents = take_centroids_trained(emb, n_cells, lloyd_iters, sample_cap)
-        else:
-            cents = take_centroids(emb, n_cells, lloyd_iters=0)
+        cents = _coarse_cents(emb, n_cells, lloyd_iters, centroids, sample_cap)
     from accumulo_wikisearch_spark.operators._scoped import Scope
 
     scope = Scope()
-    if centroids == "trained":
-        asn = scope.persist(_trained_assign(emb, cents))
-    else:
-        asn = scope.persist(ivf_assign(emb, cents))
+    assign = _trained_assign if centroids == "trained" else ivf_assign
+    asn = scope.persist(assign(emb, cents))
     dom = _dominated_lower_id(asn, threshold_pct).withColumn("_dom", F.lit(0))
     return scope.attach(
         asn.join(dom, "vec_id", "left").select(
@@ -1108,11 +1076,8 @@ def _trained_assign(
     """(vec_id, v FLOAT, cell) — assignment by the QUANTIZED vector
     against trained (int8-grid) centroids, float vector carried for the
     domination cosine; malformed rows dropped."""
-    return emb.select(
-        "vec_id",
-        _as_double(F.col("embedding")).alias("v"),
-        _assign_cells_udf(cents)(_quantize_udf()(F.col("embedding"))).alias("cell"),
-    ).where(F.col("cell") >= 0)  # drop NULL/ragged vectors, not the job
+    v = _as_double(F.col("embedding")).alias("v")
+    return _assigned(emb, _quantize_udf()(F.col("embedding")), cents, v)
 
 
 def _dominated_lower_id(asn: DataFrame, threshold_pct: int) -> DataFrame:
@@ -1294,16 +1259,18 @@ def _books_from_rows(
     ]
 
 
-def _seed_rows_shared(emb: DataFrame, n_cells: int, n_codes: int):
-    """One TakeOrdered job serving BOTH the IVF seed centroids and the PQ
-    seed codebooks (they read the same first-n corpus vectors; collecting
-    twice doubled the driver-job count of every IVF-PQ call)."""
+def _seed_rows_shared(
+    emb: DataFrame, n_cells: int, m: int, sub_dim: int, n_codes: int
+):
+    """(centroids, codebooks) of the seeded IVF-PQ from ONE TakeOrdered
+    job (both read the same first-n corpus vectors; collecting twice
+    doubled the driver-job count of every IVF-PQ call)."""
     rows = emb.orderBy("vec_id").limit(max(n_cells, n_codes)).collect()
     cents = [
         (i, [float(x) for x in r["embedding"]])
         for i, r in enumerate(rows[:n_cells])
     ]
-    return cents, rows[:n_codes]
+    return cents, _books_from_rows(rows[:n_codes], m, sub_dim)
 
 
 def pq_codes(
@@ -1424,16 +1391,9 @@ def topk_pq_adc(
     from accumulo_wikisearch_spark.operators._scoped import Scope
 
     scope = Scope()
-    codes = scope.persist(pq_codes(emb, m, sub_dim, n_codes))
+    codes = scope.persist(emb.select("vec_id", *_code_select(books, sub_dim)))
     luts = _adc_luts(emb.sparkSession, queries, books, sub_dim)
-    scored = (
-        codes.where(F.col("code_0").isNotNull())  # drop malformed-vector rows
-        .withColumnRenamed("vec_id", "neighbor_id")
-        .join(F.broadcast(luts))
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", _adc_lut_dist(m).alias("d"))
-    )
-    return scope.attach(_rank_topk(scored, k, F.asc("d")))
+    return scope.attach(_score_rank(codes.join(F.broadcast(luts)), k, m))
 
 
 def _adc_luts(
@@ -1453,9 +1413,7 @@ def _adc_luts(
     Built as one VALUES LocalRelation (no Python-RDD scan). An empty
     query set short-circuits to an empty relation (a bare ``VALUES`` is a
     SQL syntax error)."""
-    qrows = queries.select(
-        "query_id", _as_double(F.col("qv")).alias("qv")
-    ).collect()
+    qrows = _qv(queries).collect()
     if not qrows:
         lut_cols = ", ".join(f"l{s} array<double>" for s in range(len(books)))
         return spark.createDataFrame([], f"query_id bigint, {lut_cols}")
@@ -1513,35 +1471,27 @@ def topk_ivf_pq(
     a 4-byte-per-subvector table. Probes broadcast; ranking is ascending
     ADC distance with lower-id tie-break. Deterministic end-to-end (seed
     centroids + seed codebooks), hence oracle-checkable."""
-    cents, seed_rows = _seed_rows_shared(emb, n_cells, n_codes)
-    books = _books_from_rows(seed_rows, m, sub_dim)
+    cents, books = _seed_rows_shared(emb, n_cells, m, sub_dim, n_codes)
     # persist = the at-rest IVF-PQ index (cells + codes computed once, not
     # once per query — see topk_pq_adc's note); write_ivf_pq_index is the
     # durable form
     from accumulo_wikisearch_spark.operators._scoped import Scope
 
     scope = Scope()
-    corpus = scope.persist(
-        emb.select(
-            F.col("vec_id").alias("neighbor_id"),
-            _assign_cells_udf(cents)(F.col("embedding")).alias("cell"),
-            *_code_select(books, sub_dim),
-        ).where(F.col("cell") >= 0)  # drop NULL/ragged vectors, not the job
-    )
-    qv = queries.select("query_id", _as_double(F.col("qv")).alias("qv"))
-    scores = _cell_scores(F.col("qv"), _centroid_lit(cents))
-    probes = qv.select(
-        "query_id",
-        F.slice(F.reverse(F.array_sort(scores)), 1, nprobe).alias("probes"),
-    ).select("query_id", F.explode(F.col("probes.cell")).alias("cell"))
+    corpus = scope.persist(_ivf_pq_coded(emb, "embedding", cents, books, sub_dim))
+    probes = _probes(_qv(queries), cents, nprobe)
     luts = _adc_luts(emb.sparkSession, queries, books, sub_dim)
-    scored = (
-        corpus.join(F.broadcast(probes), "cell")
-        .join(F.broadcast(luts), "query_id")
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", _adc_lut_dist(m).alias("d"))
-    )
-    return scope.attach(_rank_topk(scored, k, F.asc("d")))
+    cands = corpus.join(F.broadcast(probes), "cell").join(F.broadcast(luts), "query_id")
+    return scope.attach(_score_rank(cands, k, m))
+
+
+def _ivf_pq_coded(
+    vecs: DataFrame, col: str, cents, books, sub_dim: int
+) -> DataFrame:
+    """(vec_id, code_0..code_{m-1}, cell) of ``vecs[col]`` — cell
+    assignment and PQ coding in ONE narrow pass (both kernels are
+    literal-table maps, no shuffle); unassignable rows are dropped."""
+    return _assigned(vecs, F.col(col), cents, *_code_select(books, sub_dim, col))
 
 
 def write_ivf_pq_index(
@@ -1569,51 +1519,33 @@ def write_ivf_pq_index(
     (centroids, codebooks) — also persisted beside the index as
     ``_QUANTIZER.json``."""
     if quantizers == "trained":
-        q8 = _quantized_vecs(emb).persist()
-        V = _hash_sample_q8(q8, sample_cap)
-        cents = _lloyd_refine_sample(
-            V,
-            [
-                (j, [float(x) for x in V[i]])
-                for j, i in enumerate(_greedy_farthest(V, min(n_cells, len(V))))
-            ],
-            lloyd_iters,
-        )
-        books = _pq_books_refine_sample(
-            V, _books_from_sample(V, m, sub_dim, n_codes), sub_dim, lloyd_iters
-        )
-        coded = q8.select(
-            F.col("vec_id"),
-            _assign_cells_udf(cents)(F.col("v")).alias("cell"),
-            *_code_select(books, sub_dim, col="v"),
-        )
+        vecs, col = _quantized_vecs(emb).persist(), "v"
+        V = _hash_sample_q8(vecs, sample_cap)
+        cents = _trained_cents(V, n_cells, lloyd_iters)
+        books = _trained_books(V, m, sub_dim, n_codes, lloyd_iters)
     else:
-        cents, seed_rows = _seed_rows_shared(emb, n_cells, n_codes)
-        books = _books_from_rows(seed_rows, m, sub_dim)
-        coded = emb.select(
-            F.col("vec_id"),
-            _assign_cells_udf(cents)(F.col("embedding")).alias("cell"),
-            *_code_select(books, sub_dim),
-        )
-    write_layout(
-        # drop NULL/ragged vectors, not the job
-        coded.where(F.col("cell") >= 0).repartition("cell"),
-        path,
-        ("cell",),
-        ("vec_id",),
-    )
+        vecs, col = emb, "embedding"
+        cents, books = _seed_rows_shared(emb, n_cells, m, sub_dim, n_codes)
+    coded = _ivf_pq_coded(vecs, col, cents, books, sub_dim)
+    write_layout(coded.repartition("cell"), path, ("cell",), ("vec_id",))
     _write_quantizer(emb.sparkSession, path, cents, books)
     if quantizers == "trained":
         # the quantized view served its writes; drop the cache now instead
         # of leaning on the context cleaner (r14 verdict #4)
-        q8.unpersist()
+        vecs.unpersist()
     return cents, books
 
 
 def self_queries_q8(emb: DataFrame, n: int = 5) -> DataFrame:
     """First n QUANTIZED corpus vectors as the query set — the query-side
     twin of the trained (int8-grid) index builds."""
-    return _quantized_vecs(emb).where(F.col("vec_id") < n).select(
+    return _q8_queries(_quantized_vecs(emb), n)
+
+
+def _q8_queries(q8: DataFrame, nq: int) -> DataFrame:
+    """(query_id, qv): the quantized vectors with vec_id < nq — the query
+    side of the int8-grid paths (see :func:`self_queries`)."""
+    return q8.where(F.col("vec_id") < nq).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
     )
 
@@ -1628,31 +1560,18 @@ def topk_ivf_pq_on_disk(
     nprobe: int = 4,
     sub_dim: int = _PQ_SUB,
 ) -> DataFrame:
-    """ADC top-k against a written IVF-PQ layout: probe cells become a
-    partition filter on the parquet read (only nprobe/n_cells directories
-    are touched — verify PartitionFilters in the plan), and the scan reads
-    only the code columns. Query-side work is the LUT build (driver) plus
-    m lookups per candidate."""
-    m = len(books)
-    corpus = spark.read.parquet(path).withColumnRenamed("vec_id", "neighbor_id")
-    qv = queries.select("query_id", _as_double(F.col("qv")).alias("qv"))
-    scores = _cell_scores(F.col("qv"), _centroid_lit(cents))
-    probes = qv.select(
-        "query_id",
-        F.slice(F.reverse(F.array_sort(scores)), 1, nprobe).alias("probes"),
-    ).select("query_id", F.explode(F.col("probes.cell")).alias("cell"))
-    cells = sorted({r["cell"] for r in probes.select("cell").distinct().collect()})
-    if not cells:  # empty query set: isin() with no values would throw
+    """ADC top-k against a written IVF-PQ layout: only the probed cells'
+    files are read and tombstoned vec_ids are skipped
+    (:func:`_read_probed_cells`); the scan reads only the code columns.
+    Query-side work is the LUT build (driver) plus m lookups per
+    candidate."""
+    probes = _probes(_qv(queries), cents, nprobe)
+    corpus = _read_probed_cells(spark, path, probes)
+    if corpus is None:
         return _empty_topk(spark)
     luts = _adc_luts(spark, queries, books, sub_dim)
-    scored = (
-        corpus.where(F.col("cell").isin(*cells))
-        .join(F.broadcast(probes), "cell")
-        .join(F.broadcast(luts), "query_id")
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", _adc_lut_dist(m).alias("d"))
-    )
-    return _rank_topk(scored, k, F.asc("d"))
+    cands = corpus.join(F.broadcast(probes), "cell").join(F.broadcast(luts), "query_id")
+    return _score_rank(cands, k, len(books))
 
 
 def topk_ivf_on_disk_cold(
@@ -1689,18 +1608,6 @@ def topk_ivf_pq_on_disk_cold(
 # ---------------------------------------------------------------------------
 # trained product quantization — per-subspace sampled-Lloyd codebooks
 # ---------------------------------------------------------------------------
-
-
-def _books_from_sample(V, m: int, sub_dim: int, n_codes: int):
-    """Greedy farthest-point seed codebooks per subspace over the shared
-    hash-sample matrix (each subspace runs its own Gonzalez greedy on its
-    slice — the subvector distributions differ, so the seeds do too)."""
-    books = []
-    for s in range(m):
-        X = V[:, s * sub_dim : (s + 1) * sub_dim]
-        idx = _greedy_farthest(X, min(n_codes, len(X)))
-        books.append([(c, [float(x) for x in X[i]]) for c, i in enumerate(idx)])
-    return books
 
 
 def _pq_books_refine_sample(
@@ -1765,26 +1672,7 @@ def pq_books_trained(
     whole-number arithmetic, so the books — and everything coded with
     them — are bit-replayable by the SQL oracle."""
     V = _hash_sample_q8(_quantized_vecs(emb), sample_cap)
-    return _pq_books_refine_sample(
-        V, _books_from_sample(V, m, sub_dim, n_codes), sub_dim, lloyd_iters
-    )
-
-
-def _codes_wide(q8: DataFrame, books, sub_dim: int) -> DataFrame:
-    """(neighbor_id, code_0..code_{m-1}) over the quantized corpus —
-    malformed rows dropped (null codes)."""
-    m = len(books)
-    return (
-        q8.select(
-            F.col("vec_id").alias("neighbor_id"),
-            _pq_code_udf(books, sub_dim)(F.col("v")).alias("codes"),
-        )
-        .where(F.col("codes").isNotNull())
-        .select(
-            "neighbor_id",
-            *[F.col("codes")[s].cast("int").alias(f"code_{s}") for s in range(m)],
-        )
-    )
+    return _trained_books(V, m, sub_dim, n_codes, lloyd_iters)
 
 
 def topk_pq_adc_trained(
@@ -1815,21 +1703,11 @@ def topk_pq_adc_trained(
     q8 = scope.persist(_quantized_vecs(emb))
     if books is None:
         V = _hash_sample_q8(q8, sample_cap)
-        books = _pq_books_refine_sample(
-            V, _books_from_sample(V, m, sub_dim, n_codes), sub_dim, lloyd_iters
-        )
+        books = _trained_books(V, m, sub_dim, n_codes, lloyd_iters)
     # persist = the at-rest codes table (see topk_pq_adc's note)
-    codes = scope.persist(_codes_wide(q8, books, sub_dim))
-    qv = q8.where(F.col("vec_id") < nq).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
-    luts = _adc_luts(emb.sparkSession, qv, books, sub_dim)
-    scored = (
-        codes.join(F.broadcast(luts))
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", _adc_lut_dist(m).alias("d"))
-    )
-    return scope.attach(_rank_topk(scored, k, F.asc("d")))
+    codes = scope.persist(q8.select("vec_id", *_code_select(books, sub_dim, "v")))
+    luts = _adc_luts(emb.sparkSession, _q8_queries(q8, nq), books, sub_dim)
+    return scope.attach(_score_rank(codes.join(F.broadcast(luts)), k, len(books)))
 
 
 def topk_ivf_pq_trained(
@@ -1854,44 +1732,14 @@ def topk_ivf_pq_trained(
     scope = Scope()
     q8 = scope.persist(_quantized_vecs(emb))  # shared by corpus + queries
     V = _hash_sample_q8(q8, sample_cap)
-    seed_cents = [
-        (j, [float(x) for x in V[i]])
-        for j, i in enumerate(_greedy_farthest(V, min(n_cells, len(V))))
-    ]
-    cents = _lloyd_refine_sample(V, seed_cents, lloyd_iters)
-    books = _pq_books_refine_sample(
-        V, _books_from_sample(V, m, sub_dim, n_codes), sub_dim, lloyd_iters
-    )
-    corpus = (
-        q8.select(
-            F.col("vec_id").alias("neighbor_id"),
-            _assign_cells_udf(cents)(F.col("v")).alias("cell"),
-            _pq_code_udf(books, sub_dim)(F.col("v")).alias("codes"),
-        )
-        .where(F.col("cell") >= 0)
-        .select(
-            "neighbor_id",
-            "cell",
-            *[F.col("codes")[s].cast("int").alias(f"code_{s}") for s in range(m)],
-        )
-    )
-    corpus = scope.persist(corpus)
-    qv = q8.where(F.col("vec_id") < nq).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
-    scores = _cell_scores(F.col("qv"), _centroid_lit(cents))
-    probes = qv.select(
-        "query_id",
-        F.slice(F.reverse(F.array_sort(scores)), 1, nprobe).alias("probes"),
-    ).select("query_id", F.explode(F.col("probes.cell")).alias("cell"))
+    cents = _trained_cents(V, n_cells, lloyd_iters)
+    books = _trained_books(V, m, sub_dim, n_codes, lloyd_iters)
+    corpus = scope.persist(_ivf_pq_coded(q8, "v", cents, books, sub_dim))
+    qv = _q8_queries(q8, nq)
     luts = _adc_luts(emb.sparkSession, qv, books, sub_dim)
-    scored = (
-        corpus.join(F.broadcast(probes), "cell")
-        .join(F.broadcast(luts), "query_id")
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", _adc_lut_dist(m).alias("d"))
-    )
-    return scope.attach(_rank_topk(scored, k, F.asc("d")))
+    probes = _probes(qv, cents, nprobe)
+    cands = corpus.join(F.broadcast(probes), "cell").join(F.broadcast(luts), "query_id")
+    return scope.attach(_score_rank(cands, k, m))
 
 
 # ---------------------------------------------------------------------------
@@ -2013,16 +1861,7 @@ def topk_bruteforce_q8(emb: DataFrame, k: int = 10, nq: int = 5) -> DataFrame:
     against the float brute force would conflate quantization error with
     index recall."""
     q8 = _quantized_vecs(emb)
-    corpus = q8.select(F.col("vec_id").alias("neighbor_id"), "v")
-    qv = q8.where(F.col("vec_id") < nq).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
-    scored = (
-        corpus.join(F.broadcast(qv))
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", _cosine(F.col("qv"), F.col("v")).alias("cos"))
-    )
-    return _rank_topk(scored, k, F.desc("cos"))
+    return _score_rank(q8.join(F.broadcast(_q8_queries(q8, nq))), k)
 
 
 def _recall_lsh_entry(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -110,6 +110,45 @@ def test_ivf_lloyd_depth_sweep(spark, sf_dir, duck, lloyd_iters):
     _check(got, duck, S._ivf_lloyd_sql(lloyd_iters=lloyd_iters))
 
 
+# The PQ family at one non-default point: 8 cells, 3 probes, k=7, 3
+# queries; the trained quantizers take one Lloyd step over a 128-vector
+# hash sample (below the corpus size, so the sampling threshold bites).
+_PQ_SWEEP = {
+    "pq_adc": (
+        lambda emb: S.topk_pq_adc(emb, S.self_queries(emb, 3), k=7),
+        lambda: S._pq_adc_sql(k=7, nq=3),
+    ),
+    "ivf_pq": (
+        lambda emb: S.topk_ivf_pq(
+            emb, S.self_queries(emb, 3), k=7, n_cells=8, nprobe=3
+        ),
+        lambda: S._ivf_pq_sql(n_cells=8, nprobe=3, k=7, nq=3),
+    ),
+    "pq_adc_trained": (
+        lambda emb: S.topk_pq_adc_trained(
+            emb, k=7, lloyd_iters=1, nq=3, sample_cap=128
+        ),
+        lambda: S._pq_adc_trained_sql(k=7, nq=3, lloyd_iters=1, sample_cap=128),
+    ),
+    "ivf_pq_trained": (
+        lambda emb: S.topk_ivf_pq_trained(
+            emb, k=7, n_cells=8, nprobe=3, lloyd_iters=1, nq=3, sample_cap=128
+        ),
+        lambda: S._ivf_pq_trained_sql(
+            n_cells=8, nprobe=3, k=7, nq=3, lloyd_iters=1, sample_cap=128
+        ),
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_PQ_SWEEP))
+def test_pq_family_param_sweep(spark, sf_dir, duck, case):
+    """Seed and trained ADC, with and without the coarse cells, must
+    hash-match their oracles away from the registry's default point."""
+    engine, oracle = _PQ_SWEEP[case]
+    _check(engine(_emb(spark, sf_dir)), duck, oracle())
+
+
 from accumulo_wikisearch_spark.operators import dedup as D
 
 

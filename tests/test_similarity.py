@@ -398,7 +398,7 @@ def test_ivf_and_pq_survive_null_and_ragged_embeddings(spark):
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     q = S.self_queries(emb, 2)
 
-    asn = S.ivf_assign(emb, S.take_centroids(emb, n_cells=4, lloyd_iters=0))
+    asn = S.ivf_assign(emb, S.take_centroids(emb, n_cells=4))
     ids = {r["vec_id"] for r in asn.collect()}
     assert 20 not in ids and 21 not in ids and len(ids) == 20
 
@@ -671,6 +671,32 @@ def test_trained_ivf_pq_disk_matches_in_memory(spark, emb, tmp_path):
     )
     mem = S.topk_ivf_pq_trained(emb)
     assert sorted(map(tuple, disk.collect())) == sorted(map(tuple, mem.collect()))
+
+
+def test_on_disk_readers_skip_tombstones_and_serve_empty_query_sets(
+    spark, emb, tmp_path
+):
+    """delete_ivf_vectors hides the deleted ids from BOTH written layouts
+    (IVF and IVF-PQ), and an empty query set returns no rows from either
+    reader."""
+    from accumulo_wikisearch_spark.operators import similarity as S
+
+    q = S.self_queries_q8(emb, 2)
+    ivf, ivfpq = str(tmp_path / "ivf"), str(tmp_path / "ivfpq")
+    cents = S.write_ivf_index(emb, ivf, n_cells=8)
+    cents2, books2 = S.write_ivf_pq_index(emb, ivfpq, n_cells=8)
+    readers = {
+        ivf: lambda qs: S.topk_ivf_on_disk(spark, ivf, cents, qs),
+        ivfpq: lambda qs: S.topk_ivf_pq_on_disk(spark, ivfpq, cents2, books2, qs),
+    }
+    none = spark.createDataFrame([], "query_id bigint, qv array<double>")
+    for path, read in readers.items():
+        served = {r["neighbor_id"] for r in read(q).collect()}
+        S.delete_ivf_vectors(spark, path, sorted(served))
+        after = read(q).collect()
+        assert len(after) == 20, path
+        assert not served & {r["neighbor_id"] for r in after}, path
+        assert read(none).count() == 0, path
 
 
 def test_semdedup_store_incremental_append_and_pruning(spark, emb, tmp_path):
