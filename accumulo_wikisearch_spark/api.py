@@ -41,10 +41,11 @@ class Wikisearch:
 
     DISK catalogs self-heal — the facade's answers track the store with
     the reference's queries-see-writes-during-ingest freshness
-    (README.md:206-219): every rewrite (compaction, streaming rewrite)
-    bumps the catalog's manifest version atomically
-    (``operators/manifest.py``), every ``write_delta`` /
-    ``stream_ingest_deltas`` flush changes the pending-delta name set,
+    (README.md:206-219): every compaction (including the one each
+    ``stream_ingest`` batch runs after its flush) bumps the catalog's
+    manifest version atomically (``operators/manifest.py``), every
+    ``write_delta`` / ``stream_ingest_deltas`` / ``stream_ingest`` flush
+    changes the pending-delta name set,
     and ``_planned`` compares BOTH per query (two FS listings) — on
     change it reloads the catalog through the merge-read view (fresh
     file listings, pending deltas folded) and drops every cache.

@@ -1351,6 +1351,7 @@ def _cat_fold_file_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from accumulo_wikisearch_spark.config import EngineConfig
     from accumulo_wikisearch_spark.operators.compaction import (
         _count_files,
+        _read_cdc_anchor,
         compact_index,
         write_delta,
         write_tombstones,
@@ -1358,10 +1359,7 @@ def _cat_fold_file_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from accumulo_wikisearch_spark.operators.ingest import build_index, write_index
     from accumulo_wikisearch_spark.operators.manifest import read_manifest
     from accumulo_wikisearch_spark.sources.corpus import SCALAR_FIELDS, load_articles
-    from accumulo_wikisearch_spark.streaming.incremental import (
-        _read_cdc_anchor,
-        stream_changes,
-    )
+    from accumulo_wikisearch_spark.streaming.incremental import stream_changes
 
     tune_runtime(spark)
     cfg = EngineConfig(unevaluated_fields=_FRESHNESS_CFG_FIELDS)

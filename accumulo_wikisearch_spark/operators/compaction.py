@@ -48,14 +48,50 @@ from accumulo_wikisearch_spark.operators.ingest import (
     write_index,
 )
 from accumulo_wikisearch_spark.operators.manifest import _fs
-from accumulo_wikisearch_spark.streaming.incremental import merge_global_index
 
+GI_KEYS = ["norm_value", "field", "partition_id", "language"]
 TI_KEYS = ["partition_id", "language", "doc_id", "norm_value"]
 
 # tables folded with combiner algebra vs. plain append at merge time
 _AGG_TABLES = ("global_index", "reverse_index", "metadata", "term_index")
 _APPEND_TABLES = ("doc_fields", "field_index", "docs_wide", "documents")
 _ALL_TABLES = _APPEND_TABLES + _AGG_TABLES
+
+
+def merge_global_index(
+    old: DataFrame, delta: DataFrame, uid_max: int = 20
+) -> DataFrame:
+    """Fold a delta global-index into the existing one — the
+    GlobalIndexUidCombiner algebra (``GlobalIndexUidCombiner.java:66-75``):
+    sum counts, union the uid lists, and degrade to count-only (IGNORE)
+    past ``uid_max``; a degraded input stays degraded.
+
+    Both inputs have the global_index schema
+    (norm_value, field, partition_id, language, count, uids, ignore).
+    """
+    merged = old.unionByName(delta)
+    return (
+        merged.groupBy(*GI_KEYS)
+        .agg(
+            F.sum("count").alias("count"),
+            # union of uid lists, bounded: degraded inputs contribute []
+            F.slice(
+                F.array_distinct(F.flatten(F.collect_list("uids"))), 1, uid_max + 1
+            ).alias("_uids"),
+            F.max("ignore").alias("_seen_ignore"),
+        )
+        .select(
+            *GI_KEYS,
+            "count",
+            F.when(
+                (F.col("count") > uid_max) | F.col("_seen_ignore"),
+                F.array().cast("array<string>"),
+            )
+            .otherwise(F.col("_uids"))
+            .alias("uids"),
+            ((F.col("count") > uid_max) | F.col("_seen_ignore")).alias("ignore"),
+        )
+    )
 
 
 def merge_term_index(old: DataFrame, delta: DataFrame) -> DataFrame:
@@ -217,7 +253,7 @@ def write_delta(
     are atomic, so the dir's presence proves completion; a crashed
     attempt leaves only a hidden staged dir and retries cleanly).
     Single-maintenance-writer contract: flushes, compactions
-    and streaming rewrites of one catalog must not run concurrently with
+    and streaming ingests of one catalog must not run concurrently with
     EACH OTHER (readers are lock-free — that is what the manifest
     protects); the post-write re-check below converts the cross-writer
     misuse (a compaction folding this id mid-flush) into a loud error
@@ -432,6 +468,10 @@ def load_index_with_deltas(
 
 
 def _fold_deltas(index: WikisearchIndex, stacked, config: EngineConfig) -> WikisearchIndex:
+    """The ONE fold of new rows into a catalog: append tables union,
+    aggregated tables go through their combiner merges. ``stacked(name)``
+    returns the incoming rows of table ``name`` (None = none). Shared by
+    the merge-read (and so compaction) and ``incremental_update``."""
     def u(old: DataFrame, name: str) -> DataFrame:
         d = stacked(name)
         return old.unionByName(d) if d is not None else old
@@ -525,7 +565,7 @@ def swap_in_catalog(
     concurrent readers: adopt ``tmp`` as the next versioned generation
     directory and flip the catalog's manifest pointer (one directory
     rename + one manifest-file create — see ``operators/manifest.py``).
-    Shared by major compaction and the streaming in-place rewrite.
+    The commit step of major compaction (and so of ``stream_ingest``).
     ``folded_deltas`` names the delta batches the staged catalog already
     folded in — recorded in the manifest so new loads skip them while
     their files serve in-flight merge-read queries.
@@ -991,17 +1031,18 @@ def read_changes(
     for v in range(since_version + 1, until_version + 1):
         m = read_manifest_at(spark, path, v)
         if m.get("kind") != "fold":
-            # a full rewrite (stream_ingest's per-batch swap, or any
-            # manifest predating the kind marker) can change arbitrary
-            # content that no delta dir records — an empty feed for it
-            # would read as "no changes" and silently diverge downstream
+            # a full rewrite (a direct swap_in_catalog of a staged
+            # catalog, or any manifest predating the kind marker) can
+            # change arbitrary content that no delta dir records — an
+            # empty feed for it would read as "no changes" and silently
+            # diverge downstream
             raise ValueError(
                 f"read_changes: version {v} of {path} is a"
                 f" '{m.get('kind', 'unmarked')}' generation, not a"
                 " compaction fold — its changes are not representable as"
                 " a delta feed. Anchor the feed on compaction-minted"
-                " versions only (continuous ingest via"
-                " stream_ingest_deltas + compact_index produces exactly"
+                " versions only (compact_index, stream_ingest and"
+                " stream_ingest_deltas + compact_index produce exactly"
                 " those)."
             )
         for b in sorted(m.get("folded_deltas", [])):
@@ -1491,10 +1532,6 @@ def _consumer_headroom_rows(
                 # version 0 (no folds predate it)
                 anchor = int(marker.get("source_version") or 0)
         elif kind == "cdc":
-            from accumulo_wikisearch_spark.streaming.incremental import (
-                _read_cdc_anchor,
-            )
-
             state = _read_cdc_anchor(spark, str(ref))
             if state is None:
                 status = "no-anchor"
@@ -1675,6 +1712,26 @@ def _checkpoint_query_id(spark: SparkSession, checkpoint: str) -> str | None:
     return str(qid) if qid else None
 
 
+# a CDC tail checkpoint's reconcile anchor (written by
+# streaming/incremental.py:reconcile_cdc_tail, read here too by the
+# consumer-headroom report)
+_CDC_ANCHOR = "_cdc_anchor.json"
+_CDC_ANCHOR_NEW = _CDC_ANCHOR + ".new"
+
+
+def _read_cdc_anchor(spark: SparkSession, checkpoint: str) -> dict | None:
+    """The newest complete anchor state: ``.new`` when a crashed publish
+    left one (it is only ever written complete, and is strictly newer
+    than the final it was about to replace), else the final file."""
+    from accumulo_wikisearch_spark.operators.manifest import _open_json
+
+    fs, _, jvm = _fs(spark, checkpoint)
+    body = _open_json(fs, jvm, f"{checkpoint}/{_CDC_ANCHOR_NEW}")
+    if body is not None:
+        return body
+    return _open_json(fs, jvm, f"{checkpoint}/{_CDC_ANCHOR}")
+
+
 def stream_ingest_deltas(
     stream_articles: DataFrame,
     index_path: str,
@@ -1688,9 +1745,10 @@ def stream_ingest_deltas(
     (O(batch) work) instead of rewriting the whole catalog; readers use
     :func:`load_index_with_deltas`; :func:`compact_index` runs periodically.
 
-    This is the 100 TB shape of ``streaming/incremental.py:stream_ingest``
-    (which rewrites the full index per batch — fine for small catalogs,
-    quadratic over a day of micro-batches at scale).
+    ``streaming/incremental.py:stream_ingest`` is the same flush followed
+    by a compaction per batch (every batch leaves the store fully
+    rewritten — fine for small catalogs, quadratic over a day of
+    micro-batches at scale).
 
     Delta ids are namespaced ``{incarnation}-{batchId}`` so the folded-id
     skip (at-least-once replay safety) applies only WITHIN one stream
@@ -1703,34 +1761,66 @@ def stream_ingest_deltas(
     content still skip; re-minted for a fresh checkpoint — new content
     gets fresh ids), or a random token when running checkpoint-less
     (no offset log → no replay to dedupe)."""
+    if incarnation is not None:
+        _check_batch_id(f"{incarnation}-0", "stream_ingest_deltas(incarnation)")
+    return _flush_stream(
+        "stream_ingest_deltas",
+        stream_articles,
+        index_path,
+        config,
+        scalar_fields,
+        text_col,
+        checkpoint,
+        incarnation,
+    )
+
+
+def _flush_stream(
+    caller: str,
+    stream_articles: DataFrame,
+    index_path: str,
+    config: EngineConfig,
+    scalar_fields: dict[str, str],
+    text_col: str,
+    checkpoint: str | None,
+    incarnation: str | None = None,
+    after_flush=None,
+):
+    """The ONE foreachBatch flush both streaming ingests run: each
+    non-empty micro-batch is ``build_index`` + :func:`write_delta` under
+    the id ``{incarnation}-{batchId}`` (see :func:`stream_ingest_deltas`),
+    then ``after_flush(spark)`` when given — called even when the flush
+    was a replay no-op, since a replayed batch may still be pending.
+    Returns the configured ``DataStreamWriter``."""
     import uuid as _uuid
     import warnings
 
     from accumulo_wikisearch_spark.operators.ingest import build_index
 
-    if incarnation is not None:
-        _check_batch_id(f"{incarnation}-0", "stream_ingest_deltas(incarnation)")
     token: list[str] = [incarnation] if incarnation is not None else []
+    # only stream_ingest_deltas exposes incarnation=
+    pin = caller == "stream_ingest_deltas"
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
+        spark = batch_df.sparkSession
         if not token:
             tok = None
             if checkpoint:
                 # written at query START, before any batch runs
-                tok = _checkpoint_query_id(batch_df.sparkSession, checkpoint)
+                tok = _checkpoint_query_id(spark, checkpoint)
                 if tok is None:
                     warnings.warn(
-                        f"stream_ingest_deltas: could not read the query id"
+                        f"{caller}: could not read the query id"
                         f" from {checkpoint}/metadata — replay protection"
                         f" degrades to a per-run token, so a crash replay"
                         f" re-ingests its in-flight batch as duplicates."
-                        f" Pass incarnation= to pin it.",
+                        + (" Pass incarnation= to pin it." if pin else ""),
                         RuntimeWarning,
                     )
             else:
-                conf_ckpt = batch_df.sparkSession.conf.get(
+                conf_ckpt = spark.conf.get(
                     "spark.sql.streaming.checkpointLocation", None
                 )
                 if conf_ckpt:
@@ -1738,11 +1828,12 @@ def stream_ingest_deltas(
                     # can't locate ITS metadata under the conf root — a
                     # silent per-run token would double-ingest replays
                     warnings.warn(
-                        "stream_ingest_deltas: the session sets"
+                        f"{caller}: the session sets"
                         " spark.sql.streaming.checkpointLocation but no"
                         " checkpoint= was passed here — replay protection"
                         " degrades to a per-run token. Pass checkpoint="
-                        " (or incarnation=) so restarts dedupe.",
+                        + (" (or incarnation=)" if pin else "")
+                        + " so restarts dedupe.",
                         RuntimeWarning,
                     )
             token.append(tok or _uuid.uuid4().hex[:12])
@@ -1754,6 +1845,8 @@ def stream_ingest_deltas(
         # restarted query on the same batchId forever. The incarnation
         # prefix bounds the skip to THIS stream's own replays.
         write_delta(delta, index_path, f"{token[0]}-{batch_id}", on_folded="skip")
+        if after_flush is not None:
+            after_flush(spark)
 
     writer = stream_articles.writeStream.foreachBatch(process_batch).outputMode(
         "update"

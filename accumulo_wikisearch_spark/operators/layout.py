@@ -755,8 +755,8 @@ def refit(zl: ZLayout) -> ZLayout:
     the user's choices (fields, kinds, bucket_bits), re-derive bits,
     offsets, and cat dictionaries from the data being written — new rows
     may have widened the key domain or added categories. The ONE place
-    this rule lives; major compaction and the streaming rewrite both
-    call it."""
+    this rule lives; major compaction (and so every ``stream_ingest``
+    batch) calls it."""
     return ZLayout(
         zl.x_field, zl.y_field, zl.x_kind, zl.y_kind, bucket_bits=zl.bucket_bits
     )

@@ -6,66 +6,38 @@ time: ``GlobalIndexUidCombiner`` re-folds Uid.Lists on every scan/compaction
 (scopes attached at ``WikipediaIngester.java:98-135``), so re-ingesting
 articles grows counts and may flip a posting into the IGNORE tier.
 
-Here the same fold is a deterministic DataFrame merge:
-
-    merged = old_global_index ∪ delta_global_index
-             → groupBy keys → sum counts, union uids, re-apply degradation
-
-which is exactly the combiner's algebra (sum COUNT, union UID set, IGNORE
-past uid_max — ``GlobalIndexUidCombiner.java:66-75``). The fold is
-associative/commutative, so it can run per micro-batch under Structured
-Streaming ``foreachBatch`` (this module) or as a Delta-style MERGE in a
-warehouse deployment.
-
-Scale posture: the merge shuffles only the *delta*'s keys plus matching old
-groups (a broadcast of delta keys prunes the old side); at 100 TB the old
-index is partitioned by (field, norm_value-range) files, so a micro-batch
-touches few files.
+Here every write path goes through ONE fold,
+``operators/compaction.py:_fold_deltas``: append tables union, the
+aggregated tables re-run their combiner algebra (``merge_global_index``:
+sum COUNT, union UID set, IGNORE past uid_max —
+``GlobalIndexUidCombiner.java:66-75``; ``merge_term_index``: sum tf,
+merge-sort offsets — ``TextIndexCombiner.java:40-106``;
+``merge_metadata``). :func:`incremental_update` applies it in memory;
+:func:`stream_ingest` flushes each micro-batch as a delta and compacts,
+which applies it on disk. This module also holds the CDC tails
+(:func:`stream_changes`, :func:`stream_deletes`) and their reconcile
+guard.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from accumulo_wikisearch_spark.config import EngineConfig
+from accumulo_wikisearch_spark.operators.compaction import (
+    _ALL_TABLES,
+    _CDC_ANCHOR,
+    _CDC_ANCHOR_NEW,
+    _count_files,
+    _flush_stream,
+    _fold_deltas,
+    _read_cdc_anchor,
+    _visible_file_count,
+    compact_index,
+    raw_delta_names,
+)
 from accumulo_wikisearch_spark.operators.ingest import WikisearchIndex, build_index
-from accumulo_wikisearch_spark.operators.manifest import _fs
-
-GI_KEYS = ["norm_value", "field", "partition_id", "language"]
-
-
-def merge_global_index(
-    old: DataFrame, delta: DataFrame, uid_max: int = 20
-) -> DataFrame:
-    """Fold a delta global-index into the existing one (combiner algebra).
-
-    Both inputs have the global_index schema
-    (norm_value, field, partition_id, language, count, uids, ignore).
-    """
-    merged = old.unionByName(delta)
-    return (
-        merged.groupBy(*GI_KEYS)
-        .agg(
-            F.sum("count").alias("count"),
-            # union of uid lists, bounded: degraded inputs contribute []
-            F.slice(
-                F.array_distinct(F.flatten(F.collect_list("uids"))), 1, uid_max + 1
-            ).alias("_uids"),
-            F.max("ignore").alias("_seen_ignore"),
-        )
-        .select(
-            *GI_KEYS,
-            "count",
-            F.when(
-                (F.col("count") > uid_max) | F.col("_seen_ignore"),
-                F.array().cast("array<string>"),
-            )
-            .otherwise(F.col("_uids"))
-            .alias("uids"),
-            ((F.col("count") > uid_max) | F.col("_seen_ignore")).alias("ignore"),
-        )
-    )
+from accumulo_wikisearch_spark.operators.manifest import _fs, resolve_root
 
 
 def incremental_update(
@@ -74,47 +46,19 @@ def incremental_update(
     scalar_fields: dict[str, str],
     text_col: str = "text",
 ) -> WikisearchIndex:
-    """Batch-merge newly arrived articles into an existing catalog.
+    """Batch-merge newly arrived articles into an existing catalog, in
+    memory: ``build_index`` of the new articles folded in by
+    ``_fold_deltas`` — the same fold a merge-read or a compaction applies
+    to a flushed delta, so the answers match.
 
-    Appends to doc_fields/field_index/docs_wide/documents and *folds* the
-    aggregated tables (global/reverse index) with the combiner algebra.
-    """
-    cfg = index.config
-    delta = build_index(new_articles, cfg, scalar_fields, text_col)
-    docs_wide = index.docs_wide
-    if index.zlayout is not None:
-        # a z-ordered store's docs_wide carries physical layout columns
-        # the flat delta lacks — demote to the logical schema for the
-        # union; the merged view serves unpruned (see the identical rule
-        # in compaction.load_index_with_deltas) and the periodic rewrite
-        # re-clusters (stream_ingest passes the layout back through
-        # write_index)
-        from accumulo_wikisearch_spark.operators.layout import demote_docs
-
-        docs_wide = demote_docs(docs_wide)
-    return WikisearchIndex(
-        config=cfg,
-        doc_fields=index.doc_fields.unionByName(delta.doc_fields),
-        field_index=index.field_index.unionByName(delta.field_index),
-        global_index=merge_global_index(
-            index.global_index, delta.global_index, cfg.uid_max
-        ),
-        reverse_index=merge_global_index(
-            index.reverse_index, delta.reverse_index, cfg.uid_max
-        ),
-        metadata=index.metadata.unionByName(delta.metadata)
-        .groupBy("field", "language")
-        .agg(
-            F.max("indexed").alias("indexed"),
-            F.first("normalizer").alias("normalizer"),
-            # the metadata `f` column is a SummingCombiner
-            # (WikipediaIngester.java:129-136)
-            F.sum("freq").alias("freq"),
-        ),
-        term_index=index.term_index.unionByName(delta.term_index),
-        docs_wide=docs_wide.unionByName(delta.docs_wide),
-        documents=index.documents.unionByName(delta.documents),
-    )
+    The result is an in-memory view (``catalog_path``,
+    ``manifest_version`` and ``merged_deltas`` are None): a facade over
+    it never probes the disk, so it cannot be "healed" back to the
+    stored state without the new articles."""
+    delta = build_index(new_articles, index.config, scalar_fields, text_col)
+    merged = _fold_deltas(index, lambda name: getattr(delta, name), index.config)
+    merged.catalog_path = merged.manifest_version = None
+    return merged
 
 
 # part-file count past which stream_ingest warns per batch that it is
@@ -130,12 +74,6 @@ def _warn_if_large_rewrite(spark, index_path: str, threshold: int) -> bool:
     the per-batch listing is one recursive listFiles, trivial next to the
     full rewrite it gates)."""
     import warnings
-
-    from accumulo_wikisearch_spark.operators.compaction import (
-        _ALL_TABLES,
-        _count_files,
-    )
-    from accumulo_wikisearch_spark.operators.manifest import resolve_root
 
     root, _ = resolve_root(spark, index_path)
     # count the TABLE directories only: on a legacy catalog root == path,
@@ -166,70 +104,51 @@ def stream_ingest(
     scalar_fields: dict[str, str],
     text_col: str = "text",
     checkpoint: str | None = None,
-    rewrite_warn_files: int = REWRITE_WARN_FILES,
 ):
-    """Full-rewrite streaming ingest: readStream → foreachBatch(merge +
-    rewrite). This is the RE-CLUSTERING variant — each micro-batch folds
-    the batch in and rewrites the WHOLE catalog (a z-ordered store gets
-    re-clustered with refit bits/offsets every batch).
+    """Full-rewrite streaming ingest: readStream → foreachBatch(flush +
+    compaction). Each micro-batch is flushed as a delta exactly as
+    :func:`~accumulo_wikisearch_spark.operators.compaction.stream_ingest_deltas`
+    does, then :func:`~accumulo_wikisearch_spark.operators.compaction.compact_index`
+    folds it and rewrites the WHOLE catalog. This is the RE-CLUSTERING
+    variant: a z-ordered store gets re-clustered with refit bits/offsets
+    every batch.
+
+    Every batch mints one compaction (``kind="fold"``) generation that
+    records the batch it folded, so ``read_changes``, the CDC tails and
+    ``replicate_deltas`` work across it. Replays are safe: the delta id
+    is ``{query id}-{batchId}``, so a batch Spark re-runs after a crash
+    between the compaction and the streaming commit is skipped as
+    already folded (the compaction still runs — a replayed batch may
+    still be pending).
 
     **Scale warning — O(catalog) write amplification per batch.** Over a
     day of micro-batches the bytes written are quadratic in catalog
-    size; for CONTINUOUS ingest use
-    :func:`accumulo_wikisearch_spark.operators.compaction.stream_ingest_deltas`
-    (O(batch) delta flushes, scan-time merge-read, periodic compaction —
-    the reference's own minor/major-compaction shape,
-    README.md:206-219). This path earns its keep only when every batch
-    should leave the store fully re-clustered and the catalog is small,
-    or as a scheduled re-layout job. A per-batch RuntimeWarning fires
-    once the catalog exceeds ``rewrite_warn_files`` part files.
+    size; for CONTINUOUS ingest use ``stream_ingest_deltas`` (O(batch)
+    delta flushes, scan-time merge-read, periodic compaction — the
+    reference's own minor/major-compaction shape, README.md:206-219).
+    This path earns its keep only when every batch should leave the
+    store fully re-clustered and the catalog is small, or as a scheduled
+    re-layout job. A per-batch RuntimeWarning fires once the catalog
+    exceeds ``REWRITE_WARN_FILES`` part files.
 
     ``stream_articles`` is a streaming DataFrame with the articles
     contract.
     """
-    from accumulo_wikisearch_spark.operators.compaction import swap_in_catalog
-    from accumulo_wikisearch_spark.operators.ingest import load_index, write_index
-    from accumulo_wikisearch_spark.operators.layout import refit
 
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        _warn_if_large_rewrite(spark, index_path, rewrite_warn_files)
-        current = load_index(spark, index_path, config)
-        # a z-ordered catalog keeps its layout across rewrites: refit
-        # re-derives bits/offsets (fresh rows may widen the key domain)
-        # and keeps fields/kinds/bucket_bits — the compact_index rule
-        zorder = refit(current.zlayout) if current.zlayout is not None else None
-        merged = incremental_update(current, batch_df, scalar_fields, text_col)
-        # materialize before the rewrite (the write and the z min/max
-        # derivation would otherwise recompute the merge lineage per
-        # table), then stage-and-swap: a failed table write (e.g. a
-        # z-contract violation raising per-row in the docs_wide writer)
-        # leaves the live catalog untouched, not half-overwritten. The
-        # per-batch caches release in finally — a continuous stream must
-        # not accumulate blocks across micro-batches (the r7 leak class).
-        cached = [
-            getattr(merged, name).persist()
-            for name in ["global_index", "reverse_index", "field_index", "docs_wide"]
-        ]
-        try:
-            for df in cached:
-                df.count()
-            tmp = f"{index_path}/_ingest_tmp"
-            write_index(merged, tmp, zorder=zorder)
-            swap_in_catalog(spark, tmp, index_path)
-            spark.catalog.refreshByPath(index_path)
-        finally:
-            for df in cached:
-                df.unpersist()
+    def compact(spark) -> None:
+        _warn_if_large_rewrite(spark, index_path, REWRITE_WARN_FILES)
+        compact_index(spark, index_path, config)
 
-    writer = stream_articles.writeStream.foreachBatch(process_batch).outputMode(
-        "update"
+    return _flush_stream(
+        "stream_ingest",
+        stream_articles,
+        index_path,
+        config,
+        scalar_fields,
+        text_col,
+        checkpoint,
+        after_flush=compact,
     )
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer
 
 
 # batch names in a checkpoint's file-source log: any path segment under
@@ -359,10 +278,6 @@ def _seen_batches(
     return out, committed
 
 
-_CDC_ANCHOR = "_cdc_anchor.json"
-_CDC_ANCHOR_NEW = _CDC_ANCHOR + ".new"
-
-
 def _write_cdc_anchor(spark, checkpoint: str, body: dict) -> None:
     """Publish the anchor crash-safely. rename-onto-existing is not
     portable, but the naive delete(final)+rename(tmp) has a crash window
@@ -404,19 +319,6 @@ def _write_cdc_anchor(spark, checkpoint: str, body: dict) -> None:
             f"reconcile_cdc_tail: publishing {_CDC_ANCHOR} at {checkpoint} failed"
             f" (complete state remains at {_CDC_ANCHOR_NEW})"
         )
-
-
-def _read_cdc_anchor(spark, checkpoint: str) -> dict | None:
-    """The newest complete anchor state: ``.new`` when a crashed publish
-    left one (it is only ever written complete, and is strictly newer
-    than the final it was about to replace), else the final file."""
-    from accumulo_wikisearch_spark.operators.manifest import _open_json
-
-    fs, _, jvm = _fs(spark, checkpoint)
-    body = _open_json(fs, jvm, f"{checkpoint}/{_CDC_ANCHOR_NEW}")
-    if body is not None:
-        return body
-    return _open_json(fs, jvm, f"{checkpoint}/{_CDC_ANCHOR}")
 
 
 def reconcile_cdc_tail(
@@ -475,7 +377,8 @@ def reconcile_cdc_tail(
     first guarded start are undetectable.
 
     A retained generation whose manifest ``kind != 'fold'`` (a full
-    rewrite — ``stream_ingest``'s per-batch swap) changed content no
+    rewrite — a direct ``swap_in_catalog`` of a staged catalog, or a
+    manifest predating the kind marker) changed content no
     delta dir records, so the tail cannot represent it: a rewrite ABOVE
     the anchor of a resumed tail raises the re-bootstrap error
     (``read_changes`` and ``replicate_deltas`` raise on exactly this
@@ -498,10 +401,6 @@ def reconcile_cdc_tail(
     retention from outrunning a hung consumer MID-run, it can only
     detect it at the next start. Size ``retain_generations`` to the
     slowest consumer's drain-and-restart cadence."""
-    from accumulo_wikisearch_spark.operators.compaction import (
-        _visible_file_count,
-        raw_delta_names,
-    )
     from accumulo_wikisearch_spark.operators.replication import (
         _qualified,
         _source_manifests,
@@ -777,8 +676,6 @@ def stream_changes(
     ``max_files_per_trigger`` caps per-micro-batch intake for a bounded
     blast radius on catch-up."""
     from pyspark.sql import functions as F
-
-    from accumulo_wikisearch_spark.operators.manifest import resolve_root
 
     if checkpoint is not None:
         reconcile_cdc_tail(spark, path, checkpoint)

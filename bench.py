@@ -396,9 +396,9 @@ def main() -> None:
     # LSM-combiner work) while the 8 headline queries run.
     import threading
 
+    from accumulo_wikisearch_spark.operators.compaction import merge_global_index
     from accumulo_wikisearch_spark.operators.ingest import build_index
     from accumulo_wikisearch_spark.sources.corpus import SCALAR_FIELDS, load_articles
-    from accumulo_wikisearch_spark.streaming.incremental import merge_global_index
     from pyspark.sql import functions as F
 
     stop = threading.Event()

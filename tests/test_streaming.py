@@ -10,9 +10,9 @@ from pyspark.sql import functions as F
 
 from accumulo_wikisearch_spark.config import EngineConfig
 from accumulo_wikisearch_spark.operators.ingest import build_index, load_index, write_index
+from accumulo_wikisearch_spark.operators.compaction import merge_global_index
 from accumulo_wikisearch_spark.streaming.incremental import (
     incremental_update,
-    merge_global_index,
     stream_ingest,
 )
 
