@@ -14,7 +14,7 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from accumulo_wikisearch_spark.config import EngineConfig
@@ -32,6 +32,44 @@ _TEXT_MATCH_RE = re.compile(
 )
 
 
+def _ranked_and(
+    term_index: DataFrame,
+    ts: list[str],
+    auths: list[str] | None,
+    weight: Column,
+    name: str,
+    limit: int | None,
+    df_map: Column | None = None,
+) -> DataFrame:
+    """THE ranked-AND plan every ``scored_search_*`` builds: one posting
+    scan for the terms ``ts``, the per-row ``weight`` summed per doc as
+    ``name``, the AND as a distinct-term-count filter, then the rank
+    order and the limit. ``df_map`` (a term→document-frequency map)
+    adds the ``_df`` column ``weight`` may read."""
+    keys = ["partition_id", "language", "doc_id"]
+    ti = term_index.where(F.col("norm_value").isin(*ts))
+    if auths:
+        ti = ti.where(F.col("language").isin(*auths))
+    if df_map is not None:
+        ti = ti.withColumn("_df", df_map[F.col("norm_value")])
+    g = (
+        ti.withColumn("w", weight)
+        .groupBy(*keys)
+        .agg(
+            F.sum("w").alias(name),
+            # (doc, term) posting rows are unique by construction (build
+            # groupBy / compaction re-fold), so a plain count IS the
+            # distinct-term count — avoids the two-phase distinct
+            # aggregation
+            F.count("*").alias("_n_terms"),
+        )
+        .where(F.col("_n_terms") == len(ts))
+        .select(*keys, name)
+        .orderBy(F.desc(name), "doc_id")
+    )
+    return g.limit(limit) if limit else g
+
+
 class Wikisearch:
     """Facade over ONE catalog. The cardinality/uid-posting and plan
     caches assume the index does not change underneath them; in-memory
@@ -46,12 +84,13 @@ class Wikisearch:
     manifest version atomically (``operators/manifest.py``), every
     ``write_delta`` / ``stream_ingest_deltas`` / ``stream_ingest`` flush
     changes the pending-delta name set,
-    and ``_planned`` compares BOTH per query (two FS listings) — on
+    and ``_fresh`` compares BOTH per query (two FS listings) — on
     change it reloads the catalog through the merge-read view (fresh
-    file listings, pending deltas folded) and drops every cache.
-    Z-ordered catalogs keep the additional sidecar-epoch comparison (it
-    also covers legacy z stores rewritten before the manifest existed),
-    since a cached plan embeds the layout's prune literals."""
+    file listings, pending deltas folded) and drops every cache. That
+    pair is the ONLY freshness marker: a published generation is
+    immutable (``write_index`` refuses to overwrite a catalog), so a z
+    catalog's layout — and every prune literal a cached plan embeds —
+    is a function of the manifest version."""
 
     def __init__(
         self,
@@ -175,17 +214,15 @@ class Wikisearch:
         goes through — one facade must never answer ``query()`` from the
         merge-read view and ``count_only()``/``scored_search()`` from a
         stale one. Returns a consistent
-        ``(index, card_cache, plan_cache, zlayout, manifest_version)``.
+        ``(index, card_cache, plan_cache, manifest_version)``.
 
-        The probe runs LOCK-FREE: it is FS I/O (a z-sidecar read + two
-        listStatus calls), and serializing every caller on it capped a
-        facade at the object store's LIST latency (~20-50 ms → ~20-50
+        The probe runs LOCK-FREE: it is FS I/O (two listStatus calls),
+        and serializing every caller on it capped a facade at the
+        object store's LIST latency (~20-50 ms → ~20-50
         plans/s regardless of cluster size). The heal lock is taken only
         when staleness is actually detected. In-memory catalogs
         (catalog_path None) skip the FS work entirely."""
         import time
-
-        from accumulo_wikisearch_spark.plans.planner import _current_zlayout
 
         with self._heal_lock:
             index = self.index
@@ -206,18 +243,14 @@ class Wikisearch:
             mv_key = (
                 index.manifest_version if index.catalog_path is not None else None
             )
-            return index, card_cache, plan_cache, index.zlayout, mv_key
-        zl = _current_zlayout(index)
-        stale = zl != index.zlayout
+            return index, card_cache, plan_cache, mv_key
         mv = None
-        pending = None
         if index.catalog_path is not None:
             # the universal freshness probe: every catalog rewrite
             # bumps the manifest version atomically, so ONE listing
-            # detects compaction/streaming rewrites on flat catalogs
-            # too (the z sidecar epoch only covered z stores); a
-            # SECOND listing of {path}/deltas catches newly-flushed
-            # PENDING batches, which bump neither marker — without
+            # detects compaction/streaming rewrites; a SECOND listing
+            # of {path}/deltas catches newly-flushed PENDING batches,
+            # which do not bump the version — without
             # it a long-lived facade over a stream_ingest_deltas
             # catalog misses streamed rows until the next compaction
             # (the reference's queries see writes DURING ingest,
@@ -248,12 +281,10 @@ class Wikisearch:
             raw = raw_delta_names(spark, index.catalog_path)
             mv = manifest_version(spark, index.catalog_path)
             pending = self._pending_deltas(spark, index.catalog_path, mv, raw)
-            stale = (
-                stale
-                or mv != index.manifest_version
-                or pending != frozenset(index.merged_deltas or ())
-            )
-        if stale and index.catalog_path is not None:
+        if index.catalog_path is not None and (
+            mv != index.manifest_version
+            or pending != frozenset(index.merged_deltas or ())
+        ):
             with self._heal_lock:
                 cur = self.index
                 # another thread may have healed while we probed — its
@@ -268,12 +299,11 @@ class Wikisearch:
                     cur is index
                     or cur.manifest_version != mv
                     or frozenset(cur.merged_deltas or ()) != pending
-                    or cur.zlayout != zl
                 ):
-                    # the store changed underneath us (rewrite flipped the
-                    # manifest, a re-layout changed the sidecar, or a delta
-                    # batch was flushed): old DataFrames' file listings age
-                    # out of the retention window and every derived cache
+                    # the store changed underneath us (a rewrite flipped
+                    # the manifest, or a delta batch was flushed): old
+                    # DataFrames' file listings age out of the retention
+                    # window and every derived cache
                     # (plans, cardinalities, postings) is stale. Reload the
                     # catalog and start clean — the facade self-heals
                     # instead of failing mid-scan. Merge-read semantics are
@@ -294,25 +324,17 @@ class Wikisearch:
                     # stale-plan-after-heal race)
                     self._card_cache = {}
                     self._plan_cache = {}
-                # take the layout and version the adopted reload resolved
-                # — a second sidecar read could race yet another rewrite
-                # and chase its tail
+                # take the version the adopted reload resolved — a second
+                # probe could race yet another rewrite and chase its tail
                 index = self.index
-                zl = index.zlayout
                 mv = index.manifest_version
                 plan_cache, card_cache = self._plan_cache, self._card_cache
         self._probe_stamp = time.monotonic()
-        return index, card_cache, plan_cache, zl, mv
+        return index, card_cache, plan_cache, mv
 
     def _planned(
         self, expr: str, auths: list[str] | None, force_path: str | None
     ) -> tuple[DataFrame, str]:
-        # the plan cache must key on the z-layout IDENTITY, not just the
-        # query: a cached plan embeds the layout's zb/z-interval literals,
-        # and an in-place rewrite (compaction, streaming ingest) changes
-        # bits/offsets/epoch — replaying the old literals would silently
-        # drop rows. _fresh resolves the layout (one small sidecar read,
-        # z catalogs only), which also lets run_query skip its own re-read.
         return self._plan_with(self._fresh(), expr, auths, force_path)
 
     def _plan_with(
@@ -324,49 +346,38 @@ class Wikisearch:
         pass one state so every piece answers from the same epoch — a
         second probe could heal mid-composition and silently mix epochs
         (r11 review)."""
-        index, card_cache, plan_cache, zl, mv = state
-        # the manifest version joins the key so a plan built against
-        # generation N can never be served to a generation-M query even
-        # if their layouts compare equal (flat catalogs: both zl None);
-        # the captured cache OBJECT pins late inserts to the epoch they
-        # were planned in. Dict reads are GIL-atomic — no lock needed.
-        key = (expr, tuple(sorted(auths)) if auths else None, force_path, zl, mv)
-        hit = plan_cache.get(key)
-        if hit is None:
-            hit = run_query(
+        auths_key = tuple(sorted(auths)) if auths else None
+        return self._memo_plan(
+            state,
+            (expr, auths_key, force_path),
+            lambda index, card_cache: run_query(
                 index,
                 parser.parse(expr),
                 auths,
                 force_path,
                 self.multi_value_fields,
                 card_cache,
-                zlayout=zl,
-            )
-            with self._heal_lock:
-                if len(plan_cache) >= self._plan_cache_max:
-                    # snapshot a key: a racing replace must not KeyError
-                    k0 = next(iter(plan_cache), None)
-                    if k0 is not None:
-                        plan_cache.pop(k0, None)
-                plan_cache[key] = hit
-        return hit
+            ),
+        )
 
-    def _memo_plan(self, state, key: tuple, build) -> DataFrame:
-        """Serve repeated NON-boolean serving plans (ranked/phrase) from
-        the same epoch-keyed plan LRU ``query()`` uses. This is plan
-        caching — the reference's parsed-plan LRU — never result
-        caching: the cached object is the lazy DataFrame and every
-        execution still computes from the (cached) index tables. The
-        key carries the probed epoch (zlayout identity + manifest
-        version) exactly like ``_plan_with``'s, so a heal invalidates
-        by key mismatch and late inserts land in the epoch's own dict."""
-        index, card_cache, plan_cache, zl, mv = state
-        full_key = key + (zl, mv)
+    def _memo_plan(self, state, key: tuple, build):
+        """THE plan cache insert: serve a repeated plan — boolean
+        (``_plan_with``) or ranked/phrase — from the epoch-keyed bounded
+        FIFO. This is plan caching — the reference's parsed-plan LRU —
+        never result caching: the cached object is the lazy DataFrame
+        and every execution still computes from the (cached) index
+        tables. The manifest version joins the key so a plan built
+        against generation N is never served to a generation-M query;
+        the captured cache OBJECT pins late inserts to the epoch they
+        were planned in. Dict reads are GIL-atomic — no lock needed."""
+        index, card_cache, plan_cache, mv = state
+        full_key = key + (mv,)
         hit = plan_cache.get(full_key)
         if hit is None:
             hit = build(index, card_cache)
             with self._heal_lock:
                 if len(plan_cache) >= self._plan_cache_max:
+                    # snapshot a key: a racing replace must not KeyError
                     k0 = next(iter(plan_cache), None)
                     if k0 is not None:
                         plan_cache.pop(k0, None)
@@ -570,24 +581,9 @@ class Wikisearch:
         auths_key = tuple(sorted(auths)) if auths else None
 
         def build(index, _card_cache):
-            ti = index.term_index.where(F.col("norm_value").isin(*ts))
-            if auths:
-                ti = ti.where(F.col("language").isin(*auths))
-            g = (
-                ti.groupBy("partition_id", "language", "doc_id")
-                .agg(
-                    F.sum("occurrences").alias("total_occ"),
-                    # (doc, term) posting rows are unique by construction
-                    # (build groupBy / compaction re-fold), so a plain count
-                    # IS the distinct-term count — avoids the two-phase
-                    # distinct aggregation
-                    F.count("*").alias("_n_terms"),
-                )
-                .where(F.col("_n_terms") == len(ts))
-                .select("partition_id", "language", "doc_id", "total_occ")
-                .orderBy(F.desc("total_occ"), "doc_id")
+            return _ranked_and(
+                index.term_index, ts, auths, F.col("occurrences"), "total_occ", limit
             )
-            return g.limit(limit) if limit else g
 
         return self._memo_plan(
             self._fresh(), ("__multi__", tuple(ts), auths_key, limit), build
@@ -763,30 +759,15 @@ class Wikisearch:
 
         def build(index, card_cache):
             n_total = index.doc_count()
-            ti = index.term_index.where(F.col("norm_value").isin(*ts))
-            if auths:
-                ti = ti.where(F.col("language").isin(*auths))
-            scored = ti.withColumn(
-                "_df", self._text_df_map(index, card_cache, ts)[F.col("norm_value")]
-            ).withColumn(
-                "w",
+            return _ranked_and(
+                index.term_index,
+                ts,
+                auths,
                 F.expr(f"(occurrences * {(n_total + 1) * 1000}L) div (_df + 1)"),
+                "score",
+                limit,
+                self._text_df_map(index, card_cache, ts),
             )
-            g = (
-                scored.groupBy("partition_id", "language", "doc_id")
-                .agg(
-                    F.sum("w").alias("score"),
-                    # (doc, term) posting rows are unique by construction
-                    # (build groupBy / compaction re-fold), so a plain count
-                    # IS the distinct-term count — avoids the two-phase
-                    # distinct aggregation
-                    F.count("*").alias("_n_terms"),
-                )
-                .where(F.col("_n_terms") == len(ts))
-                .select("partition_id", "language", "doc_id", "score")
-                .orderBy(F.desc("score"), "doc_id")
-            )
-            return g.limit(limit) if limit else g
 
         return self._memo_plan(
             self._fresh(), ("__tfidf__", tuple(ts), auths_key, limit), build
@@ -818,40 +799,24 @@ class Wikisearch:
         broadcast-join job."""
         ts = sorted({normalize_str(t) for t in terms})
         auths_key = tuple(sorted(auths)) if auths else None
-        keys = ["partition_id", "language", "doc_id"]
 
         def build(index, card_cache):
             n_total = index.doc_count()
             a_total = index.token_count()
-            ti = index.term_index.where(F.col("norm_value").isin(*ts))
-            if auths:
-                ti = ti.where(F.col("language").isin(*auths))
             c1 = 2200 * (n_total + 1) * a_total
-            scored = ti.withColumn(
-                "_df", self._text_df_map(index, card_cache, ts)[F.col("norm_value")]
-            ).withColumn(
-                "w",
+            return _ranked_and(
+                index.term_index,
+                ts,
+                auths,
                 F.expr(
                     f"({c1}L * occurrences) div "
                     f"((_df + 1) * ({10 * a_total}L * occurrences"
                     f" + {3 * a_total}L + {9 * n_total}L * doc_len))"
                 ),
+                "score",
+                limit,
+                self._text_df_map(index, card_cache, ts),
             )
-            g = (
-                scored.groupBy(*keys)
-                .agg(
-                    F.sum("w").alias("score"),
-                    # (doc, term) posting rows are unique by construction
-                    # (build groupBy / compaction re-fold), so a plain count
-                    # IS the distinct-term count — avoids the two-phase
-                    # distinct aggregation
-                    F.count("*").alias("_n_terms"),
-                )
-                .where(F.col("_n_terms") == len(ts))
-                .select(*keys, "score")
-                .orderBy(F.desc("score"), "doc_id")
-            )
-            return g.limit(limit) if limit else g
 
         return self._memo_plan(
             self._fresh(), ("__bm25__", tuple(ts), auths_key, limit), build

@@ -566,8 +566,9 @@ _DELTA_FRESH_CATALOGS: dict[str, str] = {}
 def _ws_facade_delta_freshness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The facade's pending-delta freshness (r11): 90% of the wiki corpus
     is the at-rest base catalog; the remaining 10% is a pending
-    minor-compaction flush (write_delta — which bumps NEITHER the
-    manifest version nor the z epoch). The base-only facade's first
+    minor-compaction flush (write_delta — which does not bump the
+    manifest version; the pending-delta set is the other half of the
+    freshness marker). The base-only facade's first
     query's freshness probe must detect the pending-delta name and
     upgrade to the merge-read view with no manual reload — the
     reference's queries see writes DURING ingest (reference
@@ -1350,14 +1351,17 @@ def _cat_fold_file_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from accumulo_wikisearch_spark.api import Wikisearch
     from accumulo_wikisearch_spark.config import EngineConfig
     from accumulo_wikisearch_spark.operators.compaction import (
+        _CDC_ANCHOR,
         _count_files,
-        _read_cdc_anchor,
         compact_index,
         write_delta,
         write_tombstones,
     )
     from accumulo_wikisearch_spark.operators.ingest import build_index, write_index
-    from accumulo_wikisearch_spark.operators.manifest import read_manifest
+    from accumulo_wikisearch_spark.operators.manifest import (
+        read_manifest,
+        read_replaced_json,
+    )
     from accumulo_wikisearch_spark.sources.corpus import SCALAR_FIELDS, load_articles
     from accumulo_wikisearch_spark.streaming.incremental import stream_changes
 
@@ -1442,7 +1446,7 @@ def _cat_fold_file_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the fold was fully consumed, so the restart passes and the
         # anchor advances THROUGH the retired version on recorded counts
         assert drain() == []
-        state = _read_cdc_anchor(spark, cp)
+        state = read_replaced_json(spark, cp, _CDC_ANCHOR)
         assert state["version"] == 3 and state["folds"] == {}, _json.dumps(
             state
         )

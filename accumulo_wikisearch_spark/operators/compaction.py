@@ -47,7 +47,7 @@ from accumulo_wikisearch_spark.operators.ingest import (
     load_index,
     write_index,
 )
-from accumulo_wikisearch_spark.operators.manifest import _fs
+from accumulo_wikisearch_spark.operators.manifest import _fs, read_replaced_json
 
 GI_KEYS = ["norm_value", "field", "partition_id", "language"]
 TI_KEYS = ["partition_id", "language", "doc_id", "norm_value"]
@@ -509,7 +509,6 @@ def _fold_deltas(index: WikisearchIndex, stacked, config: EngineConfig) -> Wikis
         docs_wide=base_docs.unionByName(d_docs) if d_docs is not None else base_docs,
         documents=u(index.documents, "documents"),
         zlayout=index.zlayout,
-        zlayout_path=index.zlayout_path,
         catalog_path=index.catalog_path,
         manifest_version=index.manifest_version,
         docs_wide_parts=parts,
@@ -652,6 +651,11 @@ def compact_index(
     ) + sum(_count_files(spark, f"{path}/deltas/{b}") for b in batches)
 
     tmp = f"{path}/_compact_tmp"
+    # a crashed earlier run may have left a partial staging catalog here;
+    # nothing references it (single-writer maintenance), and write_index
+    # refuses to write over a catalog
+    fs, th, _ = _fs(spark, tmp)
+    fs.delete(th, True)
     # measured input size keys write_index's small-catalog one-task write
     # posture (bytes, never partition counts — a real corpus never trips
     # it); None off the local filesystem keeps the scale layout
@@ -872,7 +876,6 @@ def apply_tombstones(index: WikisearchIndex, tombstones: DataFrame) -> Wikisearc
         docs_wide=anti(index.docs_wide),
         documents=anti(index.documents),
         zlayout=index.zlayout,
-        zlayout_path=index.zlayout_path,
         catalog_path=index.catalog_path,
         manifest_version=index.manifest_version,
         merged_deltas=index.merged_deltas,
@@ -1243,10 +1246,10 @@ def describe_catalog(spark: SparkSession, path: str) -> dict:
         "generations_on_disk": sorted(n for n in names if _GEN_RE.match(n)),
         "legacy_tables_present": any(t in names for t in _ALL_TABLES),
         "unrecognized_hidden": unrecognized,
-        # replica sync state, if this catalog is one (the marker name is
-        # in the root listing already in hand; one GET when present) —
-        # the ops view a replica operator needs next to version history
-        "replica_of": _replica_info(spark, path, names),
+        # replica sync state (_REPLICA.json, replaced by
+        # operators/replication.py), if this catalog is one — the ops
+        # view a replica operator needs next to version history
+        "replica_of": read_replaced_json(spark, path, _REPLICA_MARKER),
         # registered downstream consumers with retention headroom (one
         # GET per replica/cdc consumer; marker presence known from the
         # root listing already in hand)
@@ -1259,15 +1262,6 @@ def describe_catalog(spark: SparkSession, path: str) -> dict:
             else []
         ),
     }
-
-
-def _replica_info(spark: SparkSession, path: str, names: list[str]) -> dict | None:
-    if "_REPLICA.json" not in names:
-        return None
-    from accumulo_wikisearch_spark.operators.manifest import _open_json
-
-    fs, _, jvm = _fs(spark, path)
-    return _open_json(fs, jvm, f"{path}/_REPLICA.json")
 
 
 _CONSUMERS_MARKER = "_CONSUMERS.json"  # legacy (pre-r14) unversioned file
@@ -1509,7 +1503,6 @@ def _consumer_headroom_rows(
     taps are pure arithmetic. The CDC anchor is conservative (it
     advances only through fully-CONSUMED versions), so its headroom may
     under-report but never over-reports."""
-    from accumulo_wikisearch_spark.operators.manifest import _open_json
     from accumulo_wikisearch_spark.operators.replication import _qualified
 
     q_src = _qualified(spark, path)
@@ -1521,8 +1514,7 @@ def _consumer_headroom_rows(
         anchor = None
         status = "ok"
         if kind == "replica":
-            fs, _, jvm = _fs(spark, str(ref))
-            marker = _open_json(fs, jvm, f"{ref}/_REPLICA.json")
+            marker = read_replaced_json(spark, str(ref), _REPLICA_MARKER)
             if marker is None:
                 status = "no-anchor"
             elif marker.get("source") != q_src:
@@ -1532,7 +1524,7 @@ def _consumer_headroom_rows(
                 # version 0 (no folds predate it)
                 anchor = int(marker.get("source_version") or 0)
         elif kind == "cdc":
-            state = _read_cdc_anchor(spark, str(ref))
+            state = read_replaced_json(spark, str(ref), _CDC_ANCHOR)
             if state is None:
                 status = "no-anchor"
             elif state.get("source") != q_src:
@@ -1712,24 +1704,13 @@ def _checkpoint_query_id(spark: SparkSession, checkpoint: str) -> str | None:
     return str(qid) if qid else None
 
 
-# a CDC tail checkpoint's reconcile anchor (written by
-# streaming/incremental.py:reconcile_cdc_tail, read here too by the
-# consumer-headroom report)
+# a CDC tail checkpoint's reconcile anchor (replaced through
+# manifest.replace_json by streaming/incremental.py:reconcile_cdc_tail,
+# read here too by the consumer-headroom report)
 _CDC_ANCHOR = "_cdc_anchor.json"
-_CDC_ANCHOR_NEW = _CDC_ANCHOR + ".new"
-
-
-def _read_cdc_anchor(spark: SparkSession, checkpoint: str) -> dict | None:
-    """The newest complete anchor state: ``.new`` when a crashed publish
-    left one (it is only ever written complete, and is strictly newer
-    than the final it was about to replace), else the final file."""
-    from accumulo_wikisearch_spark.operators.manifest import _open_json
-
-    fs, _, jvm = _fs(spark, checkpoint)
-    body = _open_json(fs, jvm, f"{checkpoint}/{_CDC_ANCHOR_NEW}")
-    if body is not None:
-        return body
-    return _open_json(fs, jvm, f"{checkpoint}/{_CDC_ANCHOR}")
+# a replica's sync-state marker (replaced by operators/replication.py,
+# read here by describe_catalog and the consumer-headroom report)
+_REPLICA_MARKER = "_REPLICA.json"
 
 
 def stream_ingest_deltas(

@@ -83,27 +83,26 @@ class WikisearchIndex:
 
     Other attributes (same semantics as the r14 dataclass fields):
 
-    - zlayout / zlayout_path: set when docs_wide was loaded from a
-      z-ordered store (layout.ZLayout): the planner then prunes docs_wide
-      scans by query box (zb directory filter + z row-group interval)
-      before the predicate re-verify. zlayout_path points at the store so
-      the planner re-reads the sidecar PER QUERY: an in-place re-layout
-      (compaction/stream rewrite) changes bits/offsets, and pruning
-      current files with load-time parameters would silently drop rows —
-      a fresh read keeps params and files in step once the standard
-      reload/refreshByPath has happened (the transient mid-rewrite race
-      matches the non-z in-place rewrite semantics every path-based table
-      already has).
+    - zlayout: set when docs_wide was loaded from a z-ordered store
+      (layout.ZLayout): the planner then prunes docs_wide scans by query
+      box (zb directory filter + z row-group interval) before the
+      predicate re-verify. Read ONCE at load: a published generation is
+      immutable — its files and its sidecar never change in place — so
+      the load-time layout describes the files for the index's whole
+      lifetime.
     - catalog_path: catalog root when loaded from disk — lets the facade
-      RELOAD the whole index (fresh file listings + caches) when it
-      detects an in-place re-layout via the sidecar epoch; None for
-      in-memory catalogs, which are immutable by construction.
+      RELOAD the whole index (fresh file listings + caches) when its
+      freshness probe sees a new manifest version or pending-delta set;
+      None for in-memory catalogs (immutable by construction) and
+      time-travel snapshots.
     - manifest_version: the catalog's manifest version at load time
       (operators/manifest.py): None for legacy never-rewritten catalogs
       and in-memory ones. The facade compares it per query against the
-      on-disk manifest — the universal freshness marker a rewrite
-      (compaction, streaming rewrite) bumps atomically, closing the
-      self-heal gap flat catalogs had.
+      on-disk manifest — every rewrite (compaction, and so every
+      ``stream_ingest`` batch) publishes a new version atomically, and
+      ``write_index`` refuses to overwrite an existing catalog, so the
+      version (with the pending-delta set below) is the ONLY freshness
+      marker a catalog needs.
     - merged_deltas: PENDING delta batches folded into this view at load
       time: () for a plain load (base only), the folded batch names for a
       merge-read, None for in-memory catalogs. The facade's freshness
@@ -149,7 +148,6 @@ class WikisearchIndex:
         docs_wide: DataFrame | None = None,
         documents: DataFrame | None = None,
         zlayout: object | None = None,
-        zlayout_path: str | None = None,
         catalog_path: str | None = None,
         manifest_version: int | None = None,
         merged_deltas: tuple | None = None,
@@ -173,7 +171,6 @@ class WikisearchIndex:
         self.docs_wide = docs_wide
         self.documents = documents
         self.zlayout = zlayout
-        self.zlayout_path = zlayout_path
         self.catalog_path = catalog_path
         self.manifest_version = manifest_version
         self.merged_deltas = merged_deltas
@@ -677,6 +674,27 @@ def _write_tables(index: WikisearchIndex, writes: list) -> None:
             tok.unpersist()
 
 
+def _refuse_existing_catalog(spark: SparkSession, path: str) -> None:
+    """Raise when ``path`` already holds a catalog: a manifest, a
+    generation directory, or any table directory."""
+    from accumulo_wikisearch_spark.operators.manifest import (
+        _GEN_RE,
+        _MANIFEST_RE,
+        _listing,
+    )
+
+    for n in _listing(spark, path):
+        if _MANIFEST_RE.match(n) or _GEN_RE.match(n) or n in _CATALOG_TABLES:
+            raise ValueError(
+                f"write_index: {path} already holds a catalog ({n}). "
+                "Catalogs are never rewritten in place — readers resolve "
+                "the manifest's generation and would never see the new "
+                "files. Fold new rows with write_delta + compact_index, "
+                "or write the new catalog to a fresh staging path and "
+                "adopt it with swap_in_catalog."
+            )
+
+
 def write_index(
     index: WikisearchIndex, path: str, zorder=None, catalog_bytes: int | None = None
 ) -> None:
@@ -702,7 +720,13 @@ def write_index(
     query shape.
 
     The eight table writes go through :func:`_write_tables`, the
-    concurrent, tokenize-once fan-out ``write_delta`` shares."""
+    concurrent, tokenize-once fan-out ``write_delta`` shares.
+
+    ``path`` must not already hold a catalog (an empty directory is
+    fine): a published generation is immutable and the manifest version
+    is the catalog's only freshness marker, so an in-place rewrite
+    would be invisible to readers. Raises ``ValueError`` then."""
+    _refuse_existing_catalog(index.field_index.sparkSession, path)
     small = catalog_bytes is not None and catalog_bytes < SMALL_CATALOG_BYTES
 
     def shard(df: DataFrame) -> DataFrame:
@@ -876,55 +900,27 @@ def load_index(
     if at_version is not None:
         m = read_manifest_at(spark, path, at_version)
         root, version = f"{path}/{m['generation']}", int(m["version"])
-        zl = load_zlayout(spark, f"{root}/docs_wide")
-        t = _read_tables(spark, root)
-        return WikisearchIndex(
-            config=config,
-            doc_fields=t["doc_fields"],
-            field_index=t["field_index"],
-            global_index=t["global_index"],
-            reverse_index=t["reverse_index"],
-            metadata=t["metadata"],
-            term_index=t["term_index"],
-            docs_wide=t["docs_wide"],
-            documents=t["documents"],
-            # zlayout_path stays None: the generation is immutable, so
-            # load-time prune parameters are valid for the snapshot's
-            # whole lifetime — no per-query sidecar re-read
-            zlayout=zl,
-            zlayout_path=None,
-            # catalog_path None = the facade treats this like an
-            # in-memory index: no freshness probe, no self-heal, no
-            # pending-delta fold — a snapshot must never drift
-            catalog_path=None,
-            manifest_version=version,
-            merged_deltas=None,
-        )
-    # a rewritten catalog resolves through its manifest pointer to the
-    # current generation directory; never-rewritten catalogs keep their
-    # flat legacy layout (root == path, version None)
-    root, version = resolve_root(spark, path)
-    zl = load_zlayout(spark, f"{root}/docs_wide")
+    else:
+        # a rewritten catalog resolves through its manifest pointer to the
+        # current generation directory; never-rewritten catalogs keep their
+        # flat legacy layout (root == path, version None)
+        root, version = resolve_root(spark, path)
+    live = at_version is None
     t = _read_tables(spark, root)
     return WikisearchIndex(
         config=config,
-        doc_fields=t["doc_fields"],
-        field_index=t["field_index"],
-        global_index=t["global_index"],
-        reverse_index=t["reverse_index"],
-        metadata=t["metadata"],
-        term_index=t["term_index"],
-        docs_wide=t["docs_wide"],
-        documents=t["documents"],
+        **t,
         # a z-ordered store self-describes via _ZLAYOUT.json; the planner
-        # then box-prunes docs_wide scans (layout.zprune_docs), re-reading
-        # the sidecar per query via zlayout_path (flat stores skip both)
-        zlayout=zl,
-        zlayout_path=f"{root}/docs_wide" if zl is not None else None,
-        catalog_path=path,
+        # then box-prunes docs_wide scans (layout.zprune_docs). Flat
+        # stores have no sidecar → None.
+        zlayout=load_zlayout(spark, f"{root}/docs_wide"),
+        # a snapshot gets catalog_path None: the facade then treats it
+        # like an in-memory index — no freshness probe, no self-heal, no
+        # pending-delta fold — so it never drifts
+        catalog_path=path if live else None,
         manifest_version=version,
         # a plain load folds NO pending deltas; the facade probe compares
         # this against the on-disk pending set and upgrades to the
         # merge-read view on first query when batches are waiting
-        merged_deltas=(),
+        merged_deltas=() if live else None,
     )

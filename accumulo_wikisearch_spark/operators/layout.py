@@ -29,7 +29,7 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from accumulo_wikisearch_spark.operators.manifest import _fs
+from accumulo_wikisearch_spark.operators.manifest import _fs, _open_json
 
 ZBITS = 10  # per-dimension bits → z in [0, 2^20)
 BUCKET_BITS = 4  # top z-bits used as the partition directory key
@@ -141,15 +141,8 @@ def _write_meta(spark: SparkSession, path: str, meta: dict) -> None:
 def read_meta(spark: SparkSession, path: str) -> dict | None:
     """The store's persisted layout parameters, or None for a pre-metadata
     store (caller must then supply them)."""
-    fs, p, jvm = _fs(spark, f"{path}/{_META}")
-    if not fs.exists(p):
-        return None
-    stream = fs.open(p)
-    try:
-        data = bytes(jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
-    finally:
-        stream.close()
-    return json.loads(data.decode())
+    fs, _, jvm = _fs(spark, path)
+    return _open_json(fs, jvm, f"{path}/{_META}")
 
 
 def _bucket_rects(bits: int, bucket_bits: int):
@@ -274,7 +267,6 @@ def write_zordered(
     c2: str,
     bits: int | None = ZBITS,
     bucket_bits: int = BUCKET_BITS,
-    extra_partition_cols: tuple = (),
 ) -> int:
     """Write ``df`` partitioned by the z-value's top ``bucket_bits`` bits
     and z-sorted within each directory (row-group min/max clustering for
@@ -297,6 +289,20 @@ def write_zordered(
     cheap max() agg. The chosen (bits, bucket_bits) are persisted beside
     the store so readers can't silently mis-prune with mismatched
     parameters."""
+    bits = _write_z(df, path, c1, c2, bits, bucket_bits)
+    _write_meta(
+        df.sparkSession,
+        path,
+        {"c1": c1, "c2": c2, "bits": bits, "bucket_bits": bucket_bits},
+    )
+    return bits
+
+
+def _write_z(
+    df: DataFrame, path: str, c1: str, c2: str, bits: int | None, bucket_bits: int
+) -> int:
+    """:func:`write_zordered`'s data files alone, no sidecar — each
+    caller writes its own sidecar once. Returns the resolved bits."""
     _check_bucket_bits(bits if bits is not None else 64, bucket_bits)
     if bits is None:
         mx = df.select(
@@ -331,13 +337,8 @@ def write_zordered(
     write_layout(
         staged.repartitionByRange(F.col("z")),
         path,
-        partition_by=(*extra_partition_cols, "zb"),
+        partition_by=("zb",),
         sort_by=("z",),
-    )
-    _write_meta(
-        df.sparkSession,
-        path,
-        {"c1": c1, "c2": c2, "bits": bits, "bucket_bits": bucket_bits},
     )
     return bits
 
@@ -459,8 +460,7 @@ class ZLayout:
       conjuncts bound codes too (via bisect). An ``==`` against a value
       NOT in the dictionary constant-folds the box empty: the write
       contract guarantees every stored value is in the dictionary, so
-      no current-epoch row can match (stale-epoch rows bypass pruning
-      via the ``_zep`` guard as always).
+      no stored row can match.
 
     CONTRACT (enforced per-row at write): every row has BOTH fields,
     single-valued, parseable under its kind, with offset-rebased keys in
@@ -482,16 +482,9 @@ class ZLayout:
     bucket_bits: int = BUCKET_BITS
     x_off: int | None = None  # None → per-dimension min at write
     y_off: int | None = None
-    # layout epoch: a unique token minted per rewrite, stamped into the
-    # sidecar AND into every data file (the _zep partition column). The
-    # sidecar read and Spark's file listing are not atomic with an
-    # in-place rewrite's delete+rename window — the epoch lets the prune
-    # DETECT params-vs-files skew and degrade those rows to unpruned
-    # (still predicate-verified) instead of silently mis-pruning.
-    epoch: str | None = None
     # cat-kind dictionaries (sorted distinct values; code = position).
-    # None → derived from the data at write; tuples so the layout stays
-    # hashable for the facade's plan-cache key.
+    # None → derived from the data at write; tuples keep the frozen
+    # layout hashable.
     x_dict: tuple | None = None
     y_dict: tuple | None = None
 
@@ -662,38 +655,10 @@ def write_zordered_docs(docs_wide: DataFrame, path: str, zl: ZLayout) -> ZLayout
         if bits is None:
             span = max(int(r[1] or 0) - x_off, int(r[3] or 0) - y_off, 0)
             bits = max(span.bit_length(), (zl.bucket_bits + 1) // 2, 1)
-    import uuid
-
-    epoch = uuid.uuid4().hex
-    staged = (
-        raw.withColumn("_zx", F.col("_zx") - F.lit(x_off))
-        .withColumn("_zy", F.col("_zy") - F.lit(y_off))
-        # constant value, deliberately NON-foldable (concat with a
-        # zero-length slice of a data column): a plain literal gets
-        # inlined into downstream SortOrders by FoldablePropagation,
-        # EliminateSorts then drops the key, the V1 writer sees its
-        # required (_zep, zb) ordering unsatisfied and inserts its own
-        # sort — clobbering the z order inside every written file
-        # (verified r15: read-back z columns were unsorted, so z
-        # row-group min/max pruning had nothing to skip). Rows with a
-        # NULL key never reach the writer (the z computation raises
-        # first), so the partition value is exactly ``epoch``.
-        .withColumn(
-            "_zep",
-            F.concat(
-                F.lit(epoch), F.substring(F.col("_zx").cast("string"), 1, 0)
-            ),
-        )
+    staged = raw.withColumn("_zx", F.col("_zx") - F.lit(x_off)).withColumn(
+        "_zy", F.col("_zy") - F.lit(y_off)
     )
-    write_zordered(
-        staged,
-        path,
-        "_zx",
-        "_zy",
-        bits=bits,
-        bucket_bits=zl.bucket_bits,
-        extra_partition_cols=("_zep",),
-    )
+    _write_z(staged, path, "_zx", "_zy", bits, zl.bucket_bits)
     resolved = ZLayout(
         zl.x_field,
         zl.y_field,
@@ -703,7 +668,6 @@ def write_zordered_docs(docs_wide: DataFrame, path: str, zl: ZLayout) -> ZLayout
         zl.bucket_bits,
         x_off,
         y_off,
-        epoch,
         x_dict,
         y_dict,
     )
@@ -721,7 +685,6 @@ def write_zordered_docs(docs_wide: DataFrame, path: str, zl: ZLayout) -> ZLayout
             "y_kind": zl.y_kind,
             "x_off": x_off,
             "y_off": y_off,
-            "epoch": epoch,
             "x_dict": list(x_dict) if x_dict is not None else None,
             "y_dict": list(y_dict) if y_dict is not None else None,
         },
@@ -744,7 +707,6 @@ def load_zlayout(spark: SparkSession, path: str) -> ZLayout | None:
         meta["bucket_bits"],
         meta["x_off"],
         meta["y_off"],
-        meta.get("epoch"),  # pre-epoch sidecars → None (legacy prune)
         tuple(meta["x_dict"]) if meta.get("x_dict") is not None else None,
         tuple(meta["y_dict"]) if meta.get("y_dict") is not None else None,
     )
@@ -767,7 +729,7 @@ def demote_docs(docs_wide: DataFrame) -> DataFrame:
     integer keys _zx/_zy) down to docs_wide's logical schema — required
     before unioning with flat delta tables, and the single definition of
     which columns are layout-derived."""
-    return docs_wide.drop("z", "zb", "_zx", "_zy", "_zep")
+    return docs_wide.drop("z", "zb", "_zx", "_zy")
 
 
 def zbox_from_query(node, zl: ZLayout) -> tuple[int, int, int, int] | None:
@@ -890,8 +852,7 @@ def zbox_from_query(node, zl: ZLayout) -> tuple[int, int, int, int] | None:
                 if kind[c.field] == "cat" and c.op == ast.EQ:
                     # the dictionary covers EVERY stored value (write
                     # contract), so an == against an unknown category
-                    # matches no current-epoch row: fold the box empty
-                    # (stale-epoch rows bypass pruning via the _zep guard)
+                    # matches no stored row: fold the box empty
                     lo[c.field], hi[c.field] = 1, 0
                     touched = True
                 continue
@@ -923,36 +884,26 @@ def zprune_docs(docs: DataFrame, node, zl: ZLayout) -> DataFrame:
     (``zb isin``) + coarse z interval (row-group skip) from the query
     box, leaving the full predicate re-verify to the caller — a pure
     superset prune, safe under every planner path (fullscan, doc-range,
-    anchor, posting semi-join). No-op when the query gives no box.
+    anchor, posting semi-join). No-op when the query gives no box; an
+    empty box folds to an empty relation.
 
-    Epoch-guarded: rows whose ``_zep`` partition value differs from the
-    sidecar's epoch were written under DIFFERENT layout params (the
-    sidecar read and the file listing are not atomic with an in-place
-    rewrite), so the box's literals don't apply to them — they bypass
-    the prune and fall through to the caller's full-predicate verify.
-    In the consistent case every file carries the current epoch and the
-    guard adds nothing; both sides of the disjunction are partition
-    columns, so the whole predicate stays a directory-level filter."""
+    ``zl`` always describes the files under ``docs``: a published
+    generation's data files and its sidecar never change in place
+    (rewrites land in a new manifest-pointed generation), so the layout
+    read at load time stays valid for the index's whole lifetime."""
     box = zbox_from_query(node, zl)
     if box is None:
         return docs
-    stale = (
-        F.col("_zep") != F.lit(zl.epoch)
-        if zl.epoch is not None and "_zep" in docs.columns
-        else F.lit(False)
-    )
     x_lo, x_hi, y_lo, y_hi = box
-    if x_lo > x_hi or y_lo > y_hi:
-        return docs.where(stale)
-    buckets = zbuckets_for_box(x_lo, x_hi, y_lo, y_hi, zl.bits, zl.bucket_bits)
+    buckets = (
+        zbuckets_for_box(x_lo, x_hi, y_lo, y_hi, zl.bits, zl.bucket_bits)
+        if x_lo <= x_hi and y_lo <= y_hi
+        else []
+    )
     if not buckets:
-        return docs.where(stale)
-    return docs.where(
-        stale
-        | (
-            F.col("zb").isin(*buckets)
-            & _zranges_pred(x_lo, x_hi, y_lo, y_hi, zl.bits)
-        )
+        return docs.where(F.lit(False))
+    return docs.where(F.col("zb").isin(*buckets)).where(
+        _zranges_pred(x_lo, x_hi, y_lo, y_hi, zl.bits)
     )
 
 

@@ -7,7 +7,7 @@ delete+renames is crash-safe but NOT atomic for concurrent readers — a
 query planned mid-swap can read table A post-swap and table B pre-swap,
 or hit FILE_NOT_FOUND between the delete and the rename; and a FLAT
 catalog has no marker a long-lived facade can use to notice the rewrite
-at all (only z stores carried an epoch in their layout sidecar).
+at all (at the time only z stores carried a layout epoch, since removed).
 
 The fix is the classic manifest-pointer design (the table-format idea
 behind Iceberg/Delta snapshot pointers, applied at catalog granularity):
@@ -22,8 +22,15 @@ behind Iceberg/Delta snapshot pointers, applied at catalog granularity):
   and a single-object PUT on object stores — there is no moment where a
   reader can observe half a catalog;
 - the manifest version doubles as the freshness marker for EVERY
-  catalog: the facade compares it per query (one ``listStatus``) and
-  reloads on change — flat catalogs self-heal exactly like z ones now;
+  catalog: the facade compares it (with the pending-delta set, which
+  flushes change without a rewrite) per query (one ``listStatus``
+  each) and reloads on change. It is the ONLY marker because a
+  published generation is IMMUTABLE: its table files and its
+  ``_ZLAYOUT.json`` never change in place, and ``write_index`` refuses
+  to write over an existing catalog — every rewrite goes through a new
+  generation (``compact_index``, or ``swap_in_catalog`` of a staged
+  catalog). A z catalog's layout is therefore a function of the
+  version, read once per load;
 - the PREVIOUS generation is retained so queries planned against it
   finish cleanly during/after a swap; generations older than that are
   deleted (an LSM grace window — a reader more than one full rewrite
@@ -33,6 +40,10 @@ Catalogs written once and never rewritten keep the flat legacy layout
 (tables directly under ``path``, no manifest) — loading falls back to
 it, so nothing changes for immutable catalogs until the first rewrite
 mints generation 1.
+
+Small mutable state files beside a catalog (a replica's
+``_REPLICA.json``, a CDC tail's anchor) are replaced through ONE
+crash-safe protocol, :func:`replace_json` / :func:`read_replaced_json`.
 
 Reference parity: Accumulo serves consistent scans THROUGH major
 compactions (reference README.md:206-219) because tablets switch file
@@ -106,6 +117,56 @@ def _open_json(fs, jvm, pathstr: str) -> dict | None:
     finally:
         stream.close()
     return json.loads(data.decode())
+
+
+def replace_json(spark: SparkSession, directory: str, name: str, body: dict) -> None:
+    """Replace the small state file ``{directory}/{name}`` crash-safely.
+    rename-onto-existing is not portable, and the naive delete(final) +
+    rename(tmp) has a crash window with NO file on disk. Two steps
+    instead: the complete new state first becomes durable as
+    ``{name}.new`` (atomic rename from a uuid-named tmp, so concurrent
+    writers never interleave on one staging path), and only then is the
+    old final swapped out. A ``.new`` that a crashed replace left is
+    promoted first, never discarded. Every crash point leaves the old
+    final, both (``.new`` newer), or ``.new`` alone —
+    :func:`read_replaced_json` prefers ``.new``, so the newest complete
+    state is always readable."""
+    fs, _, jvm = _fs(spark, directory)
+    HPath = jvm.org.apache.hadoop.fs.Path
+    new, final = HPath(f"{directory}/{name}.new"), HPath(f"{directory}/{name}")
+
+    def promote() -> bool:
+        fs.delete(final, False)
+        return fs.rename(new, final)
+
+    fs.mkdirs(HPath(directory))
+    if fs.exists(new):
+        promote()  # finish a crashed replace: its .new is the newest state
+    tmp = HPath(f"{directory}/._{name}_tmp_{uuid.uuid4().hex}")
+    out = fs.create(tmp, True)
+    out.write(bytearray(json.dumps(body).encode()))
+    out.close()
+    if not fs.rename(tmp, new):
+        fs.delete(tmp, True)
+        raise RuntimeError(f"staging {name}.new at {directory} failed")
+    if not promote():
+        # .new is durable and the reader prefers it — state is safe
+        raise RuntimeError(
+            f"publishing {name} at {directory} failed"
+            f" (complete state remains at {name}.new)"
+        )
+
+
+def read_replaced_json(spark: SparkSession, directory: str, name: str) -> dict | None:
+    """The newest complete state :func:`replace_json` published: ``.new``
+    when a crashed replace left one (only ever written complete, and
+    strictly newer than the final it was about to replace), else the
+    final file; None when neither exists."""
+    fs, _, jvm = _fs(spark, directory)
+    body = _open_json(fs, jvm, f"{directory}/{name}.new")
+    if body is not None:
+        return body
+    return _open_json(fs, jvm, f"{directory}/{name}")
 
 
 def list_versions(spark: SparkSession, path: str) -> list[int]:

@@ -14,16 +14,16 @@ served from one cluster, but its operational model assumes replicas):
   (re-runs skip existing ids); restart-safe (a crash leaves only a
   hidden staged dir that the replica's next compaction sweeps).
 
-The replica's durable sync state is ``_REPLICA.json`` (published
-atomically, tmp-write + rename): the qualified source path, the source
-manifest version the replica is complete THROUGH (``source_version`` —
-advanced after every successful sync, not just at clone time), and a
-``received`` ledger of batch ids at the replica that the source still
-lists (pruned as source folds overtake them). The ledger is what makes
-re-ship decisions independent of the REPLICA's own fold history — a
-replica compaction's manifest eventually retires, and without the
-ledger a long-lived source pending batch would be silently shipped
-twice and double-counted.
+The replica's durable sync state is ``_REPLICA.json`` (replaced
+crash-safely by ``manifest.replace_json``): the qualified source path,
+the source manifest version the replica is complete THROUGH
+(``source_version`` — advanced after every successful sync, not just
+at clone time), and a ``received`` ledger of batch ids at the replica
+that the source still lists (pruned as source folds overtake them).
+The ledger is what makes re-ship decisions independent of the
+REPLICA's own fold history — a replica compaction's manifest
+eventually retires, and without the ledger a long-lived source pending
+batch would be silently shipped twice and double-counted.
 
 The replica is a NORMAL catalog afterwards: merge-read queryable while
 batches are pending, compactable on its own cadence, time-travelable,
@@ -43,21 +43,21 @@ silently serving a hole.
 
 from __future__ import annotations
 
-import json
-import uuid
-
 from pyspark.sql import SparkSession
 
 from accumulo_wikisearch_spark.config import EngineConfig
 from accumulo_wikisearch_spark.operators.compaction import (
     _ALL_TABLES,
+    _REPLICA_MARKER,
     _STAGED_PREFIX,
     _publish_delta,
     raw_delta_names,
 )
-from accumulo_wikisearch_spark.operators.manifest import _fs
-
-_REPLICA_MARKER = "_REPLICA.json"
+from accumulo_wikisearch_spark.operators.manifest import (
+    _fs,
+    read_replaced_json,
+    replace_json,
+)
 
 
 def _qualified(spark: SparkSession, path: str) -> str:
@@ -69,23 +69,11 @@ def _qualified(spark: SparkSession, path: str) -> str:
 
 
 def _write_marker(spark: SparkSession, dst: str, marker: dict) -> None:
-    """Publish the sync-state marker atomically (tmp-write + rename —
-    the same discipline as every manifest publish): a crash mid-write
-    must leave either the previous marker or the new one, never a
-    truncated JSON that turns the next sync into a parse error."""
-    fs, _, jvm = _fs(spark, dst)
-    HPath = jvm.org.apache.hadoop.fs.Path
-    tmp = HPath(f"{dst}/._replica_tmp_{uuid.uuid4().hex}")
-    out = fs.create(tmp, True)
-    out.write(bytearray(json.dumps(marker).encode()))
-    out.close()
-    final = HPath(f"{dst}/{_REPLICA_MARKER}")
-    fs.delete(final, False)  # rename-onto-existing is not portable
-    if not fs.rename(tmp, final):
-        fs.delete(tmp, True)
-        raise RuntimeError(
-            f"replication: publishing {_REPLICA_MARKER} at {dst} failed"
-        )
+    """Replace the sync-state marker crash-safely
+    (:func:`manifest.replace_json`): every crash point leaves the
+    previous marker or the new one readable, never none and never a
+    truncated JSON."""
+    replace_json(spark, dst, _REPLICA_MARKER, marker)
 
 
 def clone_catalog(
@@ -103,7 +91,8 @@ def clone_catalog(
     replica gets the same partition/sort (and, with ``preserve_layout``,
     the same z-clustering re-fit on the cloned data) rather than a
     byte-copy — file layout is the ENGINE's contract, not the source
-    cluster's history. Returns the published marker dict."""
+    cluster's history. Returns the published marker dict. ``dst`` must
+    not already hold a catalog (``write_index`` refuses it)."""
     from accumulo_wikisearch_spark.operators.ingest import load_index, write_index
     from accumulo_wikisearch_spark.operators.layout import refit
 
@@ -131,10 +120,7 @@ def clone_catalog(
 
 
 def _replica_marker(spark: SparkSession, dst: str) -> dict:
-    from accumulo_wikisearch_spark.operators.manifest import _open_json
-
-    fs, _, jvm = _fs(spark, dst)
-    body = _open_json(fs, jvm, f"{dst}/{_REPLICA_MARKER}")
+    body = read_replaced_json(spark, dst, _REPLICA_MARKER)
     if body is None:
         raise ValueError(
             f"replicate_deltas: {dst} has no {_REPLICA_MARKER} — bootstrap"

@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from accumulo_wikisearch_spark.functions.normalize import HASH60_DUCKDB
 from accumulo_wikisearch_spark.operators.layout import write_layout
-from accumulo_wikisearch_spark.operators.manifest import _fs
+from accumulo_wikisearch_spark.operators.manifest import _fs, _open_json
 from accumulo_wikisearch_spark.session import tune_runtime
 
 
@@ -171,7 +171,10 @@ def _lsh_bucket_udf(planes: list[list[float]]):
             out[ok] = ((dot > 0).astype(np.int64) * weights).sum(axis=1)
         return pd.Series(out)
 
-    return bucket
+    # marked nondeterministic ONLY so Catalyst cannot push the caller's
+    # `bucket >= 0` filter below the projection, which re-evaluates the
+    # kernel there: one Arrow pass per row instead of two
+    return bucket.asNondeterministic()
 
 
 def topk_lsh(
@@ -378,7 +381,12 @@ def _assign_cells_udf(centroids: list[tuple[int, list[float]]]):
             out[ok] = res
         return pd.Series(out.astype("int32"))
 
-    return assign
+    # nondeterministic for the `_lsh_bucket_udf` reason: `_assigned`'s
+    # `cell >= 0` filter must stay above the projection, so the kernel
+    # runs once per row. (The PQ `codes` kernel stays deterministic:
+    # `_code_select` reads it m times and relies on Spark deduplicating
+    # repeated references to ONE deterministic UDF.)
+    return assign.asNondeterministic()
 
 
 def _cell_scores(v: Column, cents: Column) -> Column:
@@ -529,15 +537,10 @@ def read_quantizer(
     IVF-PQ index without retraining or any in-memory state from the
     build (the serving-restart gap: the write_* return values used to be
     the only copy of the quantizer)."""
-    import json
-
-    fs, p, jvm = _fs(spark, f"{path}/_QUANTIZER.json")
-    stream = fs.open(p)
-    try:
-        data = bytes(jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
-    finally:
-        stream.close()
-    meta = json.loads(data.decode())
+    fs, _, jvm = _fs(spark, path)
+    meta = _open_json(fs, jvm, f"{path}/_QUANTIZER.json")
+    if meta is None:
+        raise FileNotFoundError(f"{path} has no _QUANTIZER.json")
     cents = [(int(c), [float(x) for x in v]) for c, v in meta["centroids"]]
     books = None
     if "codebooks" in meta:

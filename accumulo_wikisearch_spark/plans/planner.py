@@ -860,7 +860,7 @@ def explain_plan(
         # joins, no field_index scan (the doc-range plan, O4)
         "uid_shortcircuit": False,
     }
-    zl = _current_zlayout(index)
+    zl = index.zlayout
     if zl is not None:
         # z-ordered catalog: report the box the planner will prune
         # docs_wide with (None = no usable top-level bound → full scan of
@@ -903,24 +903,6 @@ def explain_plan(
     return out
 
 
-def _current_zlayout(index: WikisearchIndex):
-    """The z layout to prune with RIGHT NOW: re-read from the store's
-    sidecar when the index knows its path — an in-place re-layout
-    (compaction / streaming rewrite) changes bits/offsets, and pruning
-    the rewritten files with load-time parameters would silently drop
-    rows. One small FS read per query, only on z catalogs; flat and
-    in-memory catalogs skip it entirely."""
-    path = getattr(index, "zlayout_path", None)
-    if path is None:
-        return getattr(index, "zlayout", None)
-    from accumulo_wikisearch_spark.operators.layout import load_zlayout
-
-    return load_zlayout(index.docs_wide.sparkSession, path)
-
-
-_ZL_UNSET = object()  # sentinel: caller did not resolve the layout
-
-
 def run_query(
     index: WikisearchIndex,
     node: ast.Node,
@@ -928,19 +910,14 @@ def run_query(
     force_path: str | None = None,
     multi_value_fields: frozenset[str] = frozenset({"TEXT"}),
     card_cache: dict | None = None,
-    zlayout=_ZL_UNSET,
 ) -> tuple[DataFrame, str]:
     """Execute a parsed query; returns (result_df, path) where path is
-    'optimized' or 'fullscan'. Result = (partition_id, language, doc_id).
-
-    ``zlayout``: the resolved z layout to prune with — pass it when the
-    caller already read the sidecar this query (the facade does, to key
-    its plan cache on layout identity); defaults to resolving here."""
+    'optimized' or 'fullscan'. Result = (partition_id, language, doc_id)."""
     planner = Planner(index, multi_value_fields, card_cache)
     nnf = to_nnf(node)
     nnf = planner.expand_unfielded(nnf, auths)
     docs = index.docs_wide
-    zl = _current_zlayout(index) if zlayout is _ZL_UNSET else zlayout
+    zl = index.zlayout
     if zl is not None:
         # z-ordered catalog: a two-key query box prunes docs_wide at the
         # directory + row-group level BEFORE any path below touches it —

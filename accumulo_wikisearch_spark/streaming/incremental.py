@@ -27,17 +27,20 @@ from accumulo_wikisearch_spark.config import EngineConfig
 from accumulo_wikisearch_spark.operators.compaction import (
     _ALL_TABLES,
     _CDC_ANCHOR,
-    _CDC_ANCHOR_NEW,
     _count_files,
     _flush_stream,
     _fold_deltas,
-    _read_cdc_anchor,
     _visible_file_count,
     compact_index,
     raw_delta_names,
 )
 from accumulo_wikisearch_spark.operators.ingest import WikisearchIndex, build_index
-from accumulo_wikisearch_spark.operators.manifest import _fs, resolve_root
+from accumulo_wikisearch_spark.operators.manifest import (
+    _fs,
+    read_replaced_json,
+    replace_json,
+    resolve_root,
+)
 
 
 def incremental_update(
@@ -278,49 +281,6 @@ def _seen_batches(
     return out, committed
 
 
-def _write_cdc_anchor(spark, checkpoint: str, body: dict) -> None:
-    """Publish the anchor crash-safely. rename-onto-existing is not
-    portable, but the naive delete(final)+rename(tmp) has a crash window
-    with NO anchor on disk — the next construction would then
-    re-initialize as a fresh checkpoint and silently discard the
-    persisted fold sets, converting a detectable fell-behind into a
-    silent pass (r12 ADVICE). Two-step protocol instead: the complete
-    new state is first made durable under ``.new`` (atomic rename), and
-    only then does the old final get swapped out; every crash point
-    leaves either the old final, both (``.new`` newer), or ``.new``
-    alone — :func:`_read_cdc_anchor` prefers ``.new``, so a complete
-    anchor state is always recoverable. The staging name carries a
-    uuid so two concurrent constructions/reconciles of one checkpoint
-    cannot interleave create/rename on a shared staging path (r13
-    ADVICE; the fixed ``.new`` rename target stays safe — each rename
-    swaps in a COMPLETE staged state)."""
-    import json as _json
-    import uuid as _uuid
-
-    fs, _, jvm = _fs(spark, checkpoint)
-    HPath = jvm.org.apache.hadoop.fs.Path
-    fs.mkdirs(HPath(checkpoint))
-    tmp = HPath(f"{checkpoint}/._cdc_anchor_tmp_{_uuid.uuid4().hex}")
-    out = fs.create(tmp, True)
-    out.write(bytearray(_json.dumps(body).encode()))
-    out.close()
-    new = HPath(f"{checkpoint}/{_CDC_ANCHOR_NEW}")
-    fs.delete(new, False)  # stale leftover from a prior crash
-    if not fs.rename(tmp, new):
-        fs.delete(tmp, True)
-        raise RuntimeError(
-            f"reconcile_cdc_tail: staging {_CDC_ANCHOR_NEW} at {checkpoint} failed"
-        )
-    final = HPath(f"{checkpoint}/{_CDC_ANCHOR}")
-    fs.delete(final, False)
-    if not fs.rename(new, final):
-        # .new is durable and the reader prefers it — state is safe
-        raise RuntimeError(
-            f"reconcile_cdc_tail: publishing {_CDC_ANCHOR} at {checkpoint} failed"
-            f" (complete state remains at {_CDC_ANCHOR_NEW})"
-        )
-
-
 def reconcile_cdc_tail(
     spark, path: str, checkpoint: str, table: str = "documents"
 ) -> None:
@@ -409,7 +369,7 @@ def reconcile_cdc_tail(
     q_src = _qualified(spark, path)
     manifests = _source_manifests(spark, path)
     current = max(manifests) if manifests else 0
-    state = _read_cdc_anchor(spark, checkpoint)
+    state = read_replaced_json(spark, checkpoint, _CDC_ANCHOR)
     if state is not None:
         if state.get("source") != q_src:
             raise ValueError(
@@ -608,9 +568,13 @@ def reconcile_cdc_tail(
         for b in set(pending) | set(gained)
         if b not in attributed and b in on_disk
     }
-    _write_cdc_anchor(
+    # crash-safe replace: a lost anchor would re-initialize the guard as
+    # a fresh checkpoint and silently discard the persisted fold sets,
+    # turning a detectable fell-behind into a silent pass
+    replace_json(
         spark,
         checkpoint,
+        _CDC_ANCHOR,
         {
             "source": q_src,
             "version": new_anchor,

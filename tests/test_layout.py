@@ -185,20 +185,12 @@ def test_engine_zordered_catalog_matches_flat_engine(spark, sf_dir, tmp_path):
 
 def test_engine_zprune_empty_box_reads_zero_files(spark, sf_dir, tmp_path):
     """A box entirely outside the store's key domain (user 42 does not
-    exist at sf0.001, so auto-bits sized the domain below it) reduces to
-    the epoch guard alone — a partition filter that matches NO directory
-    on a consistent store, so the scan lists zero files. (It is not a
-    literal False: files written under a DIFFERENT epoch would carry a
-    different layout, and those rows must fall through to the full
-    predicate re-verify instead of being dropped unseen.)"""
+    exist at sf0.001, so auto-bits sized the domain below it) prunes to
+    a literal False, so the scan lists zero files."""
     _eng, zeng = _flat_and_z_engines(spark, sf_dir, tmp_path)
     df = zeng.query("USER_ID == '4242' and EVENT_TYPE == 'click'")
-    # the analyzed plan carries the epoch guard (not a literal False) …
-    analyzed = df._jdf.queryExecution().analyzed().toString()
-    assert "_zep" in analyzed
-    # … and the optimizer's partition pruning finds ZERO matching
-    # directories on a consistent store, folding the whole query to an
-    # empty relation before any file is read
+    # the optimizer folds the whole query to an empty relation before
+    # any file is read
     optimized = df._jdf.queryExecution().optimizedPlan().toString()
     assert "LocalRelation <empty>" in optimized
     assert df.count() == 0

@@ -444,3 +444,45 @@ def test_hybrid_search_topk_is_take_ordered(spark):
     take_pos = plan.index("TakeOrderedAndProject")
     win_pos = plan.index("Window")
     assert win_pos < take_pos
+
+
+def test_arrow_kernels_run_once_per_row(spark, sf_dir, tmp_path, monkeypatch):
+    """Each Arrow kernel application (one UDF over one input column) sits
+    in exactly ONE ArrowEvalPython node. A `cell >= 0` / `bucket >= 0`
+    filter pushed below the kernel's projection would re-evaluate the
+    kernel there — every vector paid two numpy passes."""
+    import re
+    from collections import Counter
+
+    from accumulo_wikisearch_spark.operators import similarity as S
+
+    def kernel_evals(df) -> Counter:
+        plan = _formatted(df)
+        args = re.findall(
+            r"\(\d+\) ArrowEvalPython\s*\n(?:Input[^\n]*\n)?Arguments: ([^\n]*)",
+            plan,
+        )
+        return Counter(
+            k for a in args for k in re.findall(r"\w+\(\w+#\d+\)", a.split("]")[0])
+        )
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    q = S.self_queries(emb, 3)
+    cents = S.take_centroids(emb, 4)
+    written = []
+    monkeypatch.setattr(S, "write_layout", lambda df, *a, **k: written.append(df))
+    S.write_ivf_pq_index(emb, str(tmp_path / "pq"), n_cells=4, quantizers="seed")
+    cases = {
+        "ivf_assign": (S.ivf_assign(emb, cents), {"assign": 1}),
+        "topk_ivf": (
+            S.topk_ivf(emb, q, k=3, n_cells=4, nprobe=2, centroids="seed"),
+            {"assign": 1},
+        ),
+        "topk_lsh": (S.topk_lsh(emb, q, k=3), {"bucket": 2}),
+        "write_ivf_pq_index": (written[0], {"assign": 1, "codes": 1}),
+    }
+    for name, (df, want) in cases.items():
+        evals = kernel_evals(df)
+        assert all(n == 1 for n in evals.values()), (name, evals)
+        kinds = Counter(k.split("(")[0] for k in evals)
+        assert kinds == Counter(want), (name, evals)
