@@ -84,13 +84,20 @@ class Wikisearch:
     manifest version atomically (``operators/manifest.py``), every
     ``write_delta`` / ``stream_ingest_deltas`` / ``stream_ingest`` flush
     changes the pending-delta name set,
-    and ``_fresh`` compares BOTH per query (two FS listings) — on
-    change it reloads the catalog through the merge-read view (fresh
-    file listings, pending deltas folded) and drops every cache. That
+    and ``_fresh`` compares BOTH per query (two FS listings). On change
+    the facade HEALS (``_heal``): it reloads the catalog through the
+    merge-read view (fresh file listings, pending deltas folded), caches
+    the new view's serving set once, releases the replaced view's
+    caches, and starts fresh plan and cardinality caches. That
     pair is the ONLY freshness marker: a published generation is
     immutable (``write_index`` refuses to overwrite a catalog), so a z
     catalog's layout — and every prune literal a cached plan embeds —
-    is a function of the manifest version."""
+    is a function of the manifest version.
+
+    A healed view holds one cached copy of the serving set (field,
+    global, term and metadata indexes and docs_wide; a z catalog's base
+    stays a file scan) until the next heal or :meth:`close`. The heal
+    request pays that copy; ``Wikisearch.open`` itself caches nothing."""
 
     def __init__(
         self,
@@ -220,8 +227,11 @@ class Wikisearch:
         and serializing every caller on it capped a facade at the
         object store's LIST latency (~20-50 ms → ~20-50
         plans/s regardless of cluster size). The heal lock is taken only
-        when staleness is actually detected. In-memory catalogs
-        (catalog_path None) skip the FS work entirely."""
+        when staleness is actually detected, and the heal (``_heal``:
+        reload, cache and build the new view, release the old one) runs
+        under it — concurrent requests wait for the built
+        view instead of each filling part of its cache. In-memory
+        catalogs (catalog_path None) skip the FS work entirely."""
         import time
 
         with self._heal_lock:
@@ -300,30 +310,7 @@ class Wikisearch:
                     or cur.manifest_version != mv
                     or frozenset(cur.merged_deltas or ()) != pending
                 ):
-                    # the store changed underneath us (a rewrite flipped
-                    # the manifest, or a delta batch was flushed): old
-                    # DataFrames' file listings age out of the retention
-                    # window and every derived cache
-                    # (plans, cardinalities, postings) is stale. Reload the
-                    # catalog and start clean — the facade self-heals
-                    # instead of failing mid-scan. Merge-read semantics are
-                    # preserved: load_index_with_deltas folds any pending
-                    # deltas (and reduces to a plain load when none exist).
-                    from accumulo_wikisearch_spark.operators.compaction import (
-                        load_index_with_deltas,
-                    )
-
-                    self.index = load_index_with_deltas(
-                        spark, index.catalog_path, index.config
-                    )
-                    # REPLACE (don't clear) both caches: a query thread
-                    # that planned against the pre-heal index may still
-                    # insert its results after this point — with fresh
-                    # dict objects its late writes land in the ORPHANED
-                    # dicts and are never served (the r10 review's
-                    # stale-plan-after-heal race)
-                    self._card_cache = {}
-                    self._plan_cache = {}
+                    self._heal(spark, cur)
                 # take the version the adopted reload resolved — a second
                 # probe could race yet another rewrite and chase its tail
                 index = self.index
@@ -331,6 +318,70 @@ class Wikisearch:
                 plan_cache, card_cache = self._plan_cache, self._card_cache
         self._probe_stamp = time.monotonic()
         return index, card_cache, plan_cache, mv
+
+    def _heal(self, spark, cur: WikisearchIndex) -> None:
+        """Replace the served view ``cur`` (caller holds the heal lock).
+
+        The store changed underneath it: a rewrite flipped the manifest,
+        or a delta batch was flushed. ``load_index_with_deltas`` reloads
+        the catalog (fresh file listings, pending deltas folded). The new
+        view's serving set is then persisted at a width sized from its
+        documents and built in one concurrent pass HERE, so the heal
+        request pays it once and the requests after it scan memory
+        instead of re-running the combiner folds over base ∪ deltas.
+        ``cur``'s caches are released only after that, so no request
+        between the two runs uncached. A thread still holding a plan on
+        ``cur`` recomputes it from files that reader grace keeps.
+
+        Both derived caches are REPLACED (not cleared): a query thread
+        that planned against ``cur`` may still insert its results after
+        this point — with fresh dict objects its late writes land in the
+        ORPHANED dicts and are never served (the r10 review's
+        stale-plan-after-heal race).
+
+        A session should hold ONE live facade per catalog: Spark keys a
+        cache entry by plan, two facades healed onto one catalog build
+        identical plans and so share entries, and one facade's release
+        then leaves the other serving uncached until its own next heal."""
+        from accumulo_wikisearch_spark.operators.compaction import (
+            _catalog_bytes,
+            load_index_with_deltas,
+        )
+        from accumulo_wikisearch_spark.operators.ingest import serving_width
+
+        new = load_index_with_deltas(spark, cur.catalog_path, cur.config)
+        if cur._persisted and (new.manifest_version, frozenset(new.merged_deltas)) == (
+            cur.manifest_version,
+            frozenset(cur.merged_deltas),
+        ):
+            # a racing heal already built this state (our probe predates
+            # it): rebuilding would plan the same tables, share their
+            # cache entries, and releasing ``cur`` would then drop them
+            return
+        width = serving_width(spark, _catalog_bytes(new.documents.inputFiles()))
+        try:
+            new.persist(width).materialize()
+        except BaseException:
+            # nothing will ever serve (or release) the half-built view
+            new.unpersist_serving()
+            raise
+        self.index = new
+        if cur._persisted:
+            cur.unpersist_serving()
+        self._card_cache = {}
+        self._plan_cache = {}
+
+    def close(self) -> None:
+        """Release the serving caches of the view this facade holds — a
+        healed disk view, or an in-memory index (``get_engine``,
+        :meth:`ingest`) — and its plan and cardinality caches. The facade
+        stays usable; its next requests read cold. The release is by plan
+        (see :meth:`_heal`): it also evicts the same entries of another
+        facade over the same catalog in this session."""
+        with self._heal_lock:
+            self.index.unpersist_serving()
+            self._card_cache = {}
+            self._plan_cache = {}
 
     def _planned(
         self, expr: str, auths: list[str] | None, force_path: str | None

@@ -683,9 +683,11 @@ def compact_index(
         # since have deleted (r13 verdict #2)
         folded_files=_folded_file_counts(spark, path, batches),
     )
-    # invalidate cached plans over the replaced files (rename does not
-    # trigger Spark's automatic overwrite invalidation)
-    spark.catalog.refreshByPath(path)
+    # no cache refresh: the swap adds a generation and rewrites no file,
+    # so a view cached under ``path`` (a live facade's) stays correct for
+    # the files it read; refreshing it would only drop blocks that facade
+    # still serves until its next heal
+
     # sweep crashed flushes' staging leftovers: maintenance ops are
     # single-writer, so any ._staged_* dir still under deltas/ at this
     # point is an orphan no publish will ever claim — the hidden-name
@@ -707,10 +709,11 @@ def compact_index(
 
 
 def _catalog_bytes(paths: list[str]) -> int | None:
-    """Total part-file bytes under ``paths`` (local schemes only — one
-    os.walk per dir, same posture as :func:`_count_files`'s local fast
-    path). None for non-local URIs, where the caller skips the
-    small-catalog write shape rather than paying remote LISTs."""
+    """Total part-file bytes under ``paths`` — directories, or the part
+    files themselves (local schemes only — one os.walk per dir, same
+    posture as :func:`_count_files`'s local fast path). None for
+    non-local URIs, where the caller skips the small-catalog write shape
+    rather than paying remote LISTs."""
     from urllib.parse import urlparse
 
     total = 0
@@ -719,7 +722,8 @@ def _catalog_bytes(paths: list[str]) -> int | None:
         if u.scheme not in ("", "file"):
             return None
         local = u.path if u.scheme == "file" else p
-        if not os.path.exists(local):
+        if os.path.isfile(local):
+            total += os.path.getsize(local)
             continue
         total += sum(
             os.path.getsize(os.path.join(dp, f))

@@ -224,52 +224,61 @@ class WikisearchIndex:
         probing ``docs_wide.rdd.getNumPartitions()`` here would force a
         full driver-side analysis of the pivot plan (~3 s with the
         Unicode translate literals) just to read a number the caller
-        already has."""
+        already has.  A z view caches only the flat delta side of its
+        docs_wide (see ``docs_wide_parts``)."""
+
+        def narrow(df: DataFrame, cur: int | None) -> DataFrame:
+            if serving_partitions is None:
+                return df
+            if cur is None:
+                cur = df.rdd.getNumPartitions()
+            return df.repartition(serving_partitions) if serving_partitions < cur else df
+
         if not self._persisted:
             if self._tokenized is not None:
                 self._tokenized = self._tokenized.persist()
-            if serving_partitions is not None:
-                # field_index is a UNION of the scalar and TEXT branches —
-                # two build-width legs, no shuffle anywhere in its lineage,
-                # so AQE never coalesces it and every per-query leaf scan
-                # pays 2×build-width tasks (128 at local[32] over a few MB;
-                # measured ~45% of warm AND-query latency at sf0.1). One
-                # tiny exchange here narrows only the cached copy; the
-                # only-narrow gate makes this a no-op at real scale, where
-                # the data's own split count exceeds the serving cap —
-                # same posture as the docs_wide narrowing below.
-                fi_cur = (
-                    2 * current_partitions
-                    if current_partitions is not None
-                    else self.field_index.rdd.getNumPartitions()
-                )
-                if serving_partitions < fi_cur:
-                    self.field_index = self.field_index.repartition(
-                        serving_partitions
+            # field_index is a UNION of the scalar and TEXT branches —
+            # two build-width legs, no shuffle anywhere in its lineage,
+            # so AQE never coalesces it and every per-query leaf scan
+            # pays 2×build-width tasks (128 at local[32] over a few MB;
+            # measured ~45% of warm AND-query latency at sf0.1). One
+            # tiny exchange here narrows only the cached copy; the
+            # only-narrow gate makes this a no-op at real scale, where
+            # the data's own split count exceeds the serving cap —
+            # same posture as the docs_wide narrowing below.
+            fi = narrow(
+                self.field_index,
+                2 * current_partitions if current_partitions is not None else None,
+            )
+            if fi is not self.field_index:
+                self.field_index = fi
+                if self._gi_from_fi:
+                    # re-derive global/reverse over the narrowed plan
+                    # so their materialization cache-hits the narrowed
+                    # field_index instead of re-deriving the union
+                    # from the token cache (identical rows: same
+                    # derivation, repartition only moves them)
+                    self.global_index = _global_index_from_fi(
+                        self.field_index, self.config.uid_max
                     )
-                    if self._gi_from_fi:
-                        # re-derive global/reverse over the narrowed plan
-                        # so their materialization cache-hits the narrowed
-                        # field_index instead of re-deriving the union
-                        # from the token cache (identical rows: same
-                        # derivation, repartition only moves them)
-                        self.global_index = _global_index_from_fi(
-                            self.field_index, self.config.uid_max
-                        )
-                        self.reverse_index = self.global_index.withColumn(
-                            "norm_value", F.reverse(F.col("norm_value"))
-                        )
+                    self.reverse_index = self.global_index.withColumn(
+                        "norm_value", F.reverse(F.col("norm_value"))
+                    )
             self.field_index = self.field_index.persist()
             self.global_index = self.global_index.persist()
-            if serving_partitions is not None:
-                cur = (
-                    current_partitions
-                    if current_partitions is not None
-                    else self.docs_wide.rdd.getNumPartitions()
-                )
-                if serving_partitions < cur:
-                    self.docs_wide = self.docs_wide.repartition(serving_partitions)
-            self.docs_wide = self.docs_wide.persist()
+            if self.zlayout is None:
+                self.docs_wide = narrow(self.docs_wide, current_partitions).persist()
+            elif self.docs_wide_parts is not None:
+                # a z view keeps its base side the pruned FILE scan — a
+                # cached relation has no files to prune, so caching it
+                # would lose the zb PartitionFilter that makes the layout
+                # worth having — and caches only the flat delta side
+                from accumulo_wikisearch_spark.operators.layout import demote_docs
+
+                zbase, extra = self.docs_wide_parts
+                extra = narrow(extra, None).persist()
+                self.docs_wide_parts = (zbase, extra)
+                self.docs_wide = demote_docs(zbase).unionByName(extra)
             # metadata / term_index may still be lazy thunks: persist at
             # construction time instead of forcing ~8 graph ops here
             # (term_index is a serving table too — scored/BM25/phrase
@@ -282,24 +291,53 @@ class WikisearchIndex:
             self._persisted = True
         return self
 
+    def _serving_frames(self) -> list[DataFrame]:
+        """The DataFrames :meth:`persist` caches, in :data:`SERVING_TABLES`
+        order: a z view's docs_wide is replaced by its flat delta side
+        (absent when it has none). The lazy tables are read from their
+        PRIVATE slot, so listing a cold index forces no graph."""
+        docs = (
+            self.docs_wide
+            if self.zlayout is None
+            else (self.docs_wide_parts or (None, None))[1]
+        )
+        frames = (
+            self.field_index,
+            self.global_index,
+            docs,
+            self._metadata,
+            self._term_index,
+        )
+        return [df for df in frames if df is not None]
+
     def materialize(self) -> "WikisearchIndex":
-        """Force-build the persisted serving tables in dependency order:
-        field_index first (fills the shared tokenized-base cache in the same
-        job), then global_index and docs_wide concurrently — both read only
-        cached inputs, so Spark runs the two independent jobs in parallel.
+        """Force-build the persisted serving tables.
+
+        A BUILT index materializes in dependency order: field_index first
+        (fills the shared tokenized-base cache in the same job), then
+        global_index and docs_wide concurrently — both read only cached
+        inputs, so Spark runs the two independent jobs in parallel.
         term_index stays lazy: it persists on the FIRST ranked query (warm
         protocol) instead of taxing every index build with its occurrence
-        shuffle — boolean-only workloads never pay for it."""
+        shuffle — boolean-only workloads never pay for it.
+
+        A LOADED or merged view (no tokenized base — the facade's heal
+        builds one) builds its whole serving set, term_index included,
+        in one concurrent pass: its tables are independent scans."""
         from concurrent.futures import ThreadPoolExecutor
 
         self.persist()
+        if self._tokenized is None:
+            frames = self._serving_frames()
+            with ThreadPoolExecutor(max_workers=len(frames)) as ex:
+                list(ex.map(lambda df: df.count(), frames))
+            return self
         self.field_index.count()
         with ThreadPoolExecutor(max_workers=2) as ex:
             list(ex.map(lambda df: df.count(), [self.global_index, self.docs_wide]))
-        if self._tokenized is not None:
-            # downstream tables are now cached themselves; drop the
-            # intermediate token cache
-            self._tokenized.unpersist()
+        # downstream tables are now cached themselves; drop the
+        # intermediate token cache
+        self._tokenized.unpersist()
         return self
 
     def unpersist_serving(self) -> "WikisearchIndex":
@@ -308,22 +346,14 @@ class WikisearchIndex:
         present), leaving the index usable but cold. The one honest way
         to reset cache state between benchmark reps — callers iterating
         their own attribute lists drifted when the serving set changed
-        (r13 ADVICE)."""
-        for tname in SERVING_TABLES:
-            # read the PRIVATE slot for the lazy tables: evicting a cold
-            # index must not force-construct a graph just to unpersist it
-            df = (
-                self._metadata
-                if tname == "metadata"
-                else self._term_index
-                if tname == "term_index"
-                else getattr(self, tname, None)
-            )
-            if df is not None:
-                try:
-                    df.unpersist()
-                except Exception:
-                    pass
+        (r13 ADVICE). Spark releases a cache entry by plan, so this also
+        evicts another view's entry for an identical plan (two facades
+        healed onto one catalog in one session)."""
+        for df in self._serving_frames():
+            try:
+                df.unpersist()
+            except Exception:
+                pass
         if self._tokenized is not None:
             try:
                 self._tokenized.unpersist()
@@ -357,6 +387,20 @@ class WikisearchIndex:
             )
             self._indexed_cache = {r["field"] for r in rows}
         return self._indexed_cache
+
+
+def serving_width(spark: SparkSession, nbytes: int | None) -> int:
+    """Partition count for a cached serving set, sized by DATA: ≈32 MB
+    of uncompressed corpus per partition (``nbytes`` is the corpus'
+    parquet size, assumed ~4× compressed), capped at the core count. A
+    5k-doc corpus lands on 1; a 100 TB corpus saturates the cap, where
+    the data's own split count already exceeds it and persist()'s
+    only-narrow gate makes this a no-op. ``nbytes`` None (size unknown,
+    e.g. on an object store) returns the cap."""
+    cores = spark.sparkContext.defaultParallelism
+    if nbytes is None:
+        return cores
+    return max(1, min(cores, (nbytes * 4) // (32 << 20)))
 
 
 def _global_index_from_fi(field_index: DataFrame, uid_max: int) -> DataFrame:

@@ -14,35 +14,17 @@ from pyspark.sql import functions as F
 
 from accumulo_wikisearch_spark.api import Wikisearch
 from accumulo_wikisearch_spark.config import EngineConfig
+from accumulo_wikisearch_spark.operators.ingest import serving_width
 
 SCALAR_FIELDS = {"ID": "id", "SOURCE": "source", "NCHARS": "n_chars", "LANG": "language"}
 
 
 def _serving_width(parquet_path: str, spark: SparkSession) -> int:
-    """Partition count for the cached per-query serving tables, sized by
-    DATA (≈32 MB of uncompressed corpus per partition, assuming ~4×
-    parquet compression) and capped at the core count.  A 5k-doc test
-    corpus lands on 1; a 100 TB corpus saturates the cap, where the
-    build's own split count already exceeds it and persist()'s
-    only-narrow gate makes this a no-op."""
-    import os
+    """:func:`serving_width` of the corpus parquet at ``parquet_path`` (a
+    file or a directory); a non-local path sizes as unknown."""
+    from accumulo_wikisearch_spark.operators.compaction import _catalog_bytes
 
-    cores = spark.sparkContext.defaultParallelism
-    p = parquet_path
-    try:
-        if os.path.isdir(p):
-            nbytes = sum(
-                os.path.getsize(os.path.join(dp, f))
-                for dp, _, fs in os.walk(p)
-                for f in fs
-            )
-        else:
-            nbytes = os.path.getsize(p)
-    except OSError:
-        # non-local filesystem (s3/hdfs URI): size unknown — return the
-        # cap; persist()'s only-narrow gate then makes this a no-op
-        return cores
-    return max(1, min(cores, (nbytes * 4) // (32 << 20)))
+    return serving_width(spark, _catalog_bytes([parquet_path]))
 
 
 def _parse_bytes(v: str) -> int:
